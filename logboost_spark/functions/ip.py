@@ -122,7 +122,8 @@ def is_private_ipv4_long(ip_long: Column) -> Column:
     """
     cond = F.lit(False)
     for lo, hi in _PRIVATE_V4_RANGES:
-        cond = cond | ip_long.between(F.lit(lo), F.lit(hi))
+        # Column.between's own expansion, minus its per-call overhead
+        cond = cond | ((ip_long >= lo) & (ip_long <= hi))
     return F.coalesce(cond, F.lit(False))
 
 
@@ -209,7 +210,19 @@ def ip_extract_stage(
     json_col_name: str | None = None,
 ):
     """Append ``ip_col`` (extracted IP or null) + ``cls_col``
-    (noip|pvt|pub) via STAGED withColumns.
+    (noip|pvt|pub) — :func:`compile_ip_extract` bound to ``df``."""
+    return compile_ip_extract(text_col, ip_col, cls_col, ip_col_name, json_col_name)(df)
+
+
+def compile_ip_extract(
+    text_col: str = "text",
+    ip_col: str = "_ip",
+    cls_col: str = "_cls",
+    ip_col_name: str | None = None,
+    json_col_name: str | None = None,
+):
+    """Build the extraction's Column list once; return ``bind(df)``, which
+    appends ``ip_col`` + ``cls_col`` via STAGED withColumns.
 
     F4 source precedence (helpers/helpers.go:304-345): with
     ``ip_col_name``, that column's value wins when it parses as an IP,
@@ -224,81 +237,75 @@ def ip_extract_stage(
     regex tree ~200× across the enrichment's 28 sentinel columns —
     measured: 12 MiB codegen task binaries and minutes of Catalyst
     tree-walking. Staged, the plan stays linear.
+
+    ``bind`` may be applied to any number of DataFrames, concurrently
+    running ones included: a Column is an immutable expression AST that
+    each Dataset converts into its own Catalyst expression instances.
     """
+    steps: list[tuple[str, Column]] = []
     if ip_col_name is not None:
         src = F.col(ip_col_name)
-        df = df.withColumn("_direct", F.when(is_valid_ip(src), src))
+        steps.append(("_direct", F.when(is_valid_ip(src), src)))
         t = src
     elif json_col_name is not None:
         probe = F.regexp_extract(F.col(json_col_name), AZURE_CLIENT_IP_RE, 2)
-        df = df.withColumn("_direct", F.when(F.length(probe) > 0, probe))
+        steps.append(("_direct", F.when(F.length(probe) > 0, probe)))
         t = F.col(text_col)
     else:
-        df = df.withColumn("_direct", F.lit(None).cast("string"))
+        steps.append(("_direct", F.lit(None).cast("string")))
         t = F.col(text_col)
     # Common case first, fully codegen'd: if the FIRST IPv4 match is
     # public it IS the answer ("first public else first"). Only rows
     # whose first match is private pay the extract-all + interpreted
     # per-element filter (higher-order functions never codegen).
     # staged separately: nullif()/when() would duplicate the regex child
-    df = df.withColumn(
-        "_m1raw",
-        F.when(F.col("_direct").isNull(), F.regexp_extract(t, "(" + IPV4_RE + ")", 1)),
+    # the staged attributes, each referenced several times below: every
+    # Column API call costs py4j round trips, and a Column is an immutable
+    # AST that may appear in any number of expressions
+    direct, m1, m1_v4l, m1_pub, v4l = (
+        F.col(c) for c in ("_direct", "_m1", "_m1_v4l", "_m1_pub", "_v4l")
     )
-    df = df.withColumn("_m1", F.when(F.length("_m1raw") > 0, F.col("_m1raw")))
-    df = df.withColumn("_m1_v4l", ipv4_to_long(F.col("_m1")))
-    df = df.withColumn("_m1_pub", ~is_private_ipv4_long(F.col("_m1_v4l")))
-    df = df.withColumn(
-        "_ips4",
-        F.when(F.col("_m1").isNotNull() & ~F.col("_m1_pub"), extract_all_ipv4(t)),
-    )
-    df = df.withColumn(
-        "_pub4", F.filter(F.col("_ips4"), lambda x: ~is_private_ipv4_str_compact(x))
-    )
-    df = df.withColumn(
-        "_ip6",
-        F.when(F.col("_direct").isNull() & F.col("_m1").isNull(), extract_first_ipv6(t)),
-    )
-    df = df.withColumn(
-        ip_col,
-        F.coalesce(
-            F.col("_direct"),
-            F.when(F.col("_m1_pub"), F.col("_m1")),
-            F.get("_pub4", 0),
-            F.col("_m1"),
-            F.col("_ip6"),
-        ),
-    )
+    no_direct = direct.isNull()
+    steps += [
+        ("_m1raw", F.when(no_direct, F.regexp_extract(t, "(" + IPV4_RE + ")", 1))),
+        ("_m1", F.when(F.length("_m1raw") > 0, F.col("_m1raw"))),
+        ("_m1_v4l", ipv4_to_long(m1)),
+        ("_m1_pub", ~is_private_ipv4_long(m1_v4l)),
+        ("_ips4", F.when(m1.isNotNull() & ~m1_pub, extract_all_ipv4(t))),
+        ("_pub4", F.filter(F.col("_ips4"), lambda x: ~is_private_ipv4_str_compact(x))),
+        ("_ip6", F.when(no_direct & m1.isNull(), extract_first_ipv6(t))),
+        (ip_col, F.coalesce(direct, F.when(m1_pub, m1), F.get("_pub4", 0), m1, "_ip6")),
+    ]
     ip = F.col(ip_col)
-    # reuse _m1_v4l when the answer IS _m1 (common); recompute otherwise
-    df = df.withColumn(
-        "_v4l",
-        F.when(ip == F.col("_m1"), F.col("_m1_v4l")).otherwise(
-            F.when(~ip.contains(":"), ipv4_to_long(ip))
+    is_v6 = ip.contains(":")
+    steps += [
+        # reuse _m1_v4l when the answer IS _m1 (common); recompute otherwise
+        ("_v4l", F.when(ip == m1, m1_v4l).otherwise(F.when(~is_v6, ipv4_to_long(ip)))),
+        (
+            "_valid",
+            F.when(ip.isNull(), F.lit(False))
+            .when(is_v6, ip.rlike(STRICT_V6_RE))
+            .otherwise(v4l.isNotNull()),
         ),
-    )
-    df = df.withColumn(
-        "_valid",
-        F.when(ip.isNull(), F.lit(False))
-        .when(ip.contains(":"), ip.rlike(STRICT_V6_RE))
-        .otherwise(F.col("_v4l").isNotNull()),
-    )
-    df = df.withColumn(
-        "_priv",
-        F.when(ip.contains(":"), is_private_ipv6_str(ip)).otherwise(
-            is_private_ipv4_long(F.col("_v4l"))
+        ("_priv", F.when(is_v6, is_private_ipv6_str(ip)).otherwise(is_private_ipv4_long(v4l))),
+        (
+            cls_col,
+            F.when(~F.col("_valid"), F.lit("noip"))
+            .when(F.col("_priv"), F.lit("pvt"))
+            .otherwise(F.lit("pub")),
         ),
-    )
-    df = df.withColumn(
-        cls_col,
-        F.when(~F.col("_valid"), F.lit("noip"))
-        .when(F.col("_priv"), F.lit("pvt"))
-        .otherwise(F.lit("pub")),
-    )
-    return df.drop(
+    ]
+    scratch = (
         "_ips4", "_pub4", "_ip6", "_valid", "_priv", "_direct",
         "_m1raw", "_m1", "_m1_v4l", "_m1_pub",
     )
+
+    def bind(df):
+        for name, col in steps:
+            df = df.withColumn(name, col)
+        return df.drop(*scratch)
+
+    return bind
 
 
 def first_public_ip(text: Column) -> Column:

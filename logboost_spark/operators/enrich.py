@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ip import ip_extract_stage
+from ..functions.ip import compile_ip_extract
 from ..functions.tld import tld_of
 from ..semantics import (
     DNS_FIELDS,
@@ -42,7 +42,7 @@ from ..semantics import (
     WHOIS_DOMAIN_FIELDS,
     WHOIS_IP_FIELDS,
 )
-from .geo_join import flatten_intervals, merge_disjoint_interval_tables, range_lookup_join
+from .geo_join import compile_range_lookup, flatten_intervals, merge_disjoint_interval_tables
 
 _DC_CATEGORY = "dc"
 _DC_FEED = "internal datacenter list"
@@ -91,20 +91,37 @@ def enrich_extract(
     ip_col_name: str | None = None,
     json_col_name: str | None = None,
 ) -> DataFrame:
-    """Phase 1 of enrich: IP extraction + join-key columns.
+    """Phase 1 of enrich: IP extraction + join-key columns
+    (:func:`compile_extract` bound to ``df``)."""
+    return compile_extract(text_col, ip_col_name, json_col_name)(df)
 
-    Appends ``_ip``/``_cls`` (ip_extract_stage) plus the public-only
-    join keys ``_join_ip`` (string) and ``_join_v4`` (int form). This is
-    the only part of enrich that reads ``text``; everything downstream
-    (enrich_joins) references these slim attributes — which is what lets
-    the pipeline shuffle extraction output instead of formatted rows.
+
+def compile_extract(
+    text_col: str = "text",
+    ip_col_name: str | None = None,
+    json_col_name: str | None = None,
+):
+    """Build phase 1 of enrich once; return ``bind(df)``.
+
+    ``bind`` appends ``_ip``/``_cls`` (compile_ip_extract) plus the
+    public-only join keys ``_join_ip`` (string) and ``_join_v4`` (int
+    form). This is the only part of enrich that reads ``text``;
+    everything downstream (enrich_joins) references these slim
+    attributes — which is what lets the pipeline shuffle extraction
+    output instead of formatted rows.
     """
-    df = ip_extract_stage(
-        df, text_col, ip_col_name=ip_col_name, json_col_name=json_col_name
+    extract_ip = compile_ip_extract(
+        text_col, ip_col_name=ip_col_name, json_col_name=json_col_name
     )
     pub = F.col("_cls") == "pub"
-    df = df.withColumn("_join_ip", F.when(pub, F.col("_ip")))
-    return df.withColumn("_join_v4", F.when(pub, F.col("_v4l"))).drop("_v4l")
+    join_ip = F.when(pub, F.col("_ip"))
+    join_v4 = F.when(pub, F.col("_v4l"))
+
+    def bind(df: DataFrame) -> DataFrame:
+        df = extract_ip(df).withColumn("_join_ip", join_ip)
+        return df.withColumn("_join_v4", join_v4).drop("_v4l")
+
+    return bind
 
 
 def enrich(
@@ -129,12 +146,11 @@ def enrich(
     otherwise re-walks the big extraction expression trees once per
     join, superlinearly — measured 20s → 120s → minutes of pure
     driver time as joins accumulate. The barrier also materializes the
-    extraction once, so multi-action consumers (the per-group commit
-    jobs) don't recompute it. On a cluster with unreliable local disks
-    prefer `spark.checkpoint.dir` + .checkpoint(), or stage the
-    extraction to a table. (run_pipeline no longer uses the barrier: its
-    per-group salted exchange sits between extraction and the joins and
-    materializes the slim extraction output as shuffle files instead.)
+    extraction once, so multi-action consumers don't recompute it. On a
+    cluster with unreliable local disks prefer `spark.checkpoint.dir` +
+    .checkpoint(), or stage the extraction to a table. run_pipeline does
+    not call this: there the per-group salted exchange sits between
+    extraction and joins.
 
     CONTRACT: every stage here is deterministic over its input rows
     (broadcast lookups are fixed tables; no sampling, no wall-clock
@@ -159,6 +175,13 @@ def enrich(
     )
 
 
+def _sentinel(col, is_noip, is_pvt):
+    """The no-IP / private-IP sentinel wrapper around a public-path value,
+    given the two ``_cls`` tests (built once and shared by every sentinel
+    Column of a stage)."""
+    return F.when(is_noip, "NoIP").when(is_pvt, "PVT").otherwise(col)
+
+
 def enrich_joins(
     df: DataFrame,
     lookups: dict[str, DataFrame],
@@ -168,12 +191,36 @@ def enrich_joins(
     use_idb: bool = True,
     dc_asn_numbers: list[int] | None = None,
 ) -> DataFrame:
-    """Phase 2 of enrich: broadcast join pyramid + lb_* output columns.
+    """Phase 2 of enrich: broadcast join pyramid + lb_* output columns
+    (:func:`compile_joins` bound to ``df``).
 
     Expects the enrich_extract columns (``_ip``/``_cls``/``_join_ip``/
     ``_join_v4``) as real attributes on ``df``.
     """
-    pub = F.col("_cls") == "pub"
+    return compile_joins(
+        lookups, use_ti, use_dns, use_whois, use_idb, dc_asn_numbers
+    )(df)
+
+
+def compile_joins(
+    lookups: dict[str, DataFrame],
+    use_ti: bool = True,
+    use_dns: bool = True,
+    use_whois: bool = True,
+    use_idb: bool = True,
+    dc_asn_numbers: list[int] | None = None,
+):
+    """Prepare the broadcast sides and build every output Column of phase
+    2 once; return ``bind(df)``, which adds the joins and the lb_* select
+    to ``df`` in a handful of DataFrame calls."""
+    # Every Column below is built once per pipeline, and each Column API
+    # call is several py4j round trips: share repeated sub-expressions
+    # (a Column is an immutable AST) and name columns by string.
+    cls = F.col("_cls")
+    is_noip, is_pvt = cls == "noip", cls == "pvt"
+
+    def sentinel(col):
+        return _sentinel(col, is_noip, is_pvt)
 
     # --- geo (J1/J2): ONE prefix-bucketed broadcast range join ----------
     # geo_asn + geo_city are outer-merged into a single disjoint interval
@@ -205,13 +252,12 @@ def enrich_joins(
                 .collect()
             ]
         )
-        lookups["geo_merged"] = df.sparkSession.createDataFrame(
+        lookups["geo_merged"] = lookups["geo_asn"].sparkSession.createDataFrame(
             merge_disjoint_interval_tables(a_rows, b_rows, n_a=2, n_b=2),
             "net_start bigint, net_end bigint, asn_org string, "
             "asn_number bigint, country string, city string",
         )
-    df = range_lookup_join(
-        df,
+    geo_join = compile_range_lookup(
         F.col("_join_v4"),
         lookups["geo_merged"],
         ["asn_org", "asn_number", "country", "city"],
@@ -223,35 +269,21 @@ def enrich_joins(
         if "_dc_asn_numbers" not in lookups:
             lookups["_dc_asn_numbers"] = [r[0] for r in lookups["dc_asn"].collect()]
         dc_asn_numbers = lookups["_dc_asn_numbers"]
-    df = df.withColumn(
-        "_is_dc", F.coalesce(F.col("_g_asn_number").isin(dc_asn_numbers), F.lit(False))
-    )
-
-    out_cols = [*df.columns]
-
-    def _sentinel(col, noip="NoIP", pvt="PVT"):
-        return (
-            F.when(F.col("_cls") == "noip", F.lit(noip))
-            .when(F.col("_cls") == "pvt", F.lit(pvt))
-            .otherwise(col)
-        )
+    is_dc_col = F.coalesce(F.col("_g_asn_number").isin(dc_asn_numbers), F.lit(False))
 
     # --- geo output columns ---------------------------------------------
     geo_out = [
-        _sentinel(F.col("_ip"), noip="NoIP", pvt=None).alias("lb_IP"),
-        _sentinel(F.coalesce(F.col("_g_asn_org"), F.lit(""))).alias("lb_ASN"),
-        _sentinel(
+        # lb_IP on the PVT path carries the extracted private IP (helpers.go:349)
+        F.when(is_noip, "NoIP")
+        .otherwise(F.col("_ip"))
+        .alias("lb_IP"),
+        sentinel(F.coalesce("_g_asn_org", F.lit(""))).alias("lb_ASN"),
+        sentinel(
             F.coalesce(F.col("_g_asn_number").cast("string"), F.lit(""))
         ).alias("lb_ASN_Number"),
-        _sentinel(F.coalesce(F.col("_g_country"), F.lit(""))).alias("lb_Country"),
-        _sentinel(F.coalesce(F.col("_g_city"), F.lit(""))).alias("lb_City"),
+        sentinel(F.coalesce("_g_country", F.lit(""))).alias("lb_Country"),
+        sentinel(F.coalesce("_g_city", F.lit(""))).alias("lb_City"),
     ]
-    # lb_IP on the PVT path carries the extracted private IP (helpers.go:349)
-    geo_out[0] = (
-        F.when(F.col("_cls") == "noip", F.lit("NoIP"))
-        .otherwise(F.col("_ip"))
-        .alias("lb_IP")
-    )
 
     # --- ONE broadcast join for every ip-keyed lookup --------------------
     # TI (J3), DNS (J5), IP-WHOIS (J8) and IDB (J9) all key on _join_ip.
@@ -264,6 +296,143 @@ def enrich_joins(
     # row instead of four — which matters whenever codegen fusion breaks
     # (stage too wide, method split) or on executors where four separate
     # broadcast relations would each hold memory.
+    combined = None
+    if use_ti or use_dns or use_whois or use_idb:
+        combined = _combined_ip_lookup(lookups, use_ti, use_dns, use_whois, use_idb)
+        combined_side = F.broadcast(combined)
+        combined_cond = F.col("_join_ip") == combined["_ipk"]
+
+    # --- threat intel (J3+J4+A1) -----------------------------------------
+    ti_out = []
+    if use_ti:
+        # every array op happened lookup-side in ti_by_ip; per fact row
+        # this is just a flag-picked string coalesce. Semantics preserved:
+        # dc + ti-hit → merged lists; dc + no-hit → the DC entry alone
+        # (old code's concat-with-empty path); no-dc + no-hit → none/0.
+        is_dc = F.col("_is_dc")
+        ti_out = [
+            sentinel(
+                F.when(
+                    is_dc, F.coalesce("_ti_cats_dc_str", F.lit(_DC_CATEGORY))
+                ).otherwise(F.coalesce("_ti_cats_str", F.lit("none")))
+            ).alias("lb_ThreatCategories"),
+            sentinel(
+                F.when(
+                    is_dc, F.coalesce("_ti_nfeeds_dc_str", F.lit("1"))
+                ).otherwise(F.coalesce("_ti_nfeeds_str", F.lit("0")))
+            ).alias("lb_ThreatFeedCount"),
+            sentinel(
+                F.when(
+                    is_dc, F.coalesce("_ti_feeds_dc_str", F.lit(_DC_FEED))
+                ).otherwise(F.coalesce("_ti_feeds_str", F.lit("none")))
+            ).alias("lb_ThreatFeeds"),
+        ]
+
+    # --- DNS + TLD (J5+J6) ------------------------------------------------
+    dns_out = []
+    if use_dns:
+        tld_col = F.when(cls == "pub", F.col("_tld_lk"))
+        dns_out = [
+            sentinel(
+                F.coalesce("_domains_str", F.lit("none"))
+            ).alias("lb_Domains"),
+            sentinel(F.coalesce("_tld", F.lit("none"))).alias("lb_TLD"),
+        ]
+
+    # --- WHOIS domain (J7) -------------------------------------------------
+    wd_out = []
+    if use_whois and use_dns:
+        wd = lookups["whois_domain"].selectExpr(
+            "domain AS _wd_domain",
+            "created AS _wd_created",
+            "updated AS _wd_updated",
+            "country AS _wd_country",
+            "org AS _wd_org",
+        )
+        tld = F.col("_tld")
+        has_domain = tld.isNotNull() & (tld != "none")
+        no_domain = ~has_domain
+        wd_side = F.broadcast(wd)
+        wd_cond = F.when(has_domain, tld) == wd["_wd_domain"]
+        # valid domain + lookup miss → "err" (live lookup failed);
+        # no domain at all → "NA" (lookup skipped, helpers.go:469-473)
+        for src, name in zip(
+            ["_wd_created", "_wd_updated", "_wd_country", "_wd_org"],
+            WHOIS_DOMAIN_FIELDS,
+        ):
+            wd_out.append(
+                sentinel(
+                    F.when(no_domain, "NA").otherwise(F.coalesce(src, F.lit("err")))
+                ).alias(name)
+            )
+
+    # --- WHOIS IP (J8) -------------------------------------------------------
+    wi_out = []
+    if use_whois:
+        for src, name in zip(
+            ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"],
+            WHOIS_IP_FIELDS,
+        ):
+            wi_out.append(
+                sentinel(F.coalesce(f"_wi_{src}", F.lit("err"))).alias(name)
+            )
+
+    # --- Shodan InternetDB (J9) ----------------------------------------------
+    idb_out = []
+    if use_idb:
+        for src, name in zip(
+            ["cpes", "hostnames", "ports", "tags", "vulns"], IDB_FIELDS
+        ):
+            idb_out.append(
+                sentinel(F.coalesce(f"_idb_{src}", F.lit("err"))).alias(name)
+            )
+
+    lb_out = [
+        cls.alias("lb_class"),
+        *geo_out,
+        *ti_out,
+        *dns_out,
+        *wd_out,
+        *wi_out,
+        *idb_out,
+    ]
+
+    def bind(df: DataFrame) -> DataFrame:
+        df = geo_join(df).withColumn("_is_dc", is_dc_col)
+        keep = [c for c in df.columns if not c.startswith("_") and c != "domains"]
+        if combined is not None:
+            df = df.join(combined_side, combined_cond, "left").drop("_ipk")
+        if use_dns:
+            df = df.withColumn("_tld", tld_col)
+        if wd_out:
+            df = df.join(wd_side, wd_cond, "left")
+        return df.select(*keep, *lb_out)
+
+    return bind
+
+
+def _combined_ip_lookup(
+    lookups: dict[str, DataFrame],
+    use_ti: bool,
+    use_dns: bool,
+    use_whois: bool,
+    use_idb: bool,
+) -> DataFrame:
+    """The ip-keyed lookups (TI, DNS, IP-WHOIS, IDB, as enabled) pre-joined
+    into one ``_ipk``-keyed table, materialised once per lookups dict."""
+    # The combined table is MATERIALIZED once per (lookups dict, flags):
+    # without this every Spark ACTION (each per-group commit job, every
+    # bench rep) re-ran the lookup-side pre-join — two aggregation
+    # exchanges, a union-distinct, and the tld_of ArrowEvalPython
+    # (spawning Python workers) — measured as tens of seconds of
+    # mostly-idle stage time per pipeline run (guide §1.1: the time was
+    # going to broadcast builds, not the fact scan). Dimension-sized
+    # (~1k rows), so the one-time driver collect is the same pattern as
+    # the precomputed geo_merged fixture; the re-created 1-partition
+    # frame makes every later broadcast build a single trivial task.
+    cache_key = ("_combined_ip", use_ti, use_dns, use_whois, use_idb)
+    if cache_key in lookups:
+        return lookups[cache_key]
     ip_lookups: list[DataFrame] = []
     if use_ti:
         ip_lookups.append(ti_by_ip(lookups["ti"]).withColumnRenamed("ip", "_ipk"))
@@ -315,147 +484,27 @@ def enrich_joins(
                 F.array_join("vulns", "|").alias("_idb_vulns"),
             )
         )
-    if ip_lookups:
-        # key union + left joins rather than chained full_outer: full
-        # outer can't broadcast (it would plan lookup-side SortMergeJoins);
-        # left joins of dimension-sized frames stay BroadcastHashJoin all
-        # the way down, keeping the whole enrich plan shuffle-free.
-        #
-        # The combined table is MATERIALIZED once per (lookups dict,
-        # flags): without this every Spark ACTION (each per-group commit
-        # job, every bench rep) re-ran the lookup-side pre-join — two
-        # aggregation exchanges, a union-distinct, and the tld_of
-        # ArrowEvalPython (spawning Python workers) — measured as tens of
-        # seconds of mostly-idle stage time per pipeline run (guide §1.1:
-        # the time was going to broadcast builds, not the fact scan).
-        # Dimension-sized (~1k rows), so the one-time driver collect is
-        # the same pattern as the precomputed geo_merged fixture; the
-        # re-created 1-partition frame makes every later broadcast build
-        # a single trivial task.
-        cache_key = ("_combined_ip", use_ti, use_dns, use_whois, use_idb)
-        if cache_key not in lookups:
-            keys = ip_lookups[0].select("_ipk")
-            for lk in ip_lookups[1:]:
-                keys = keys.union(lk.select("_ipk"))
-            combined = keys.distinct()
-            for lk in ip_lookups:
-                combined = combined.join(F.broadcast(lk), "_ipk", "left")
-            # session-temp parquet round-trip, NOT createDataFrame(rows):
-            # a rows-list frame scans through a pickled Python RDD and
-            # would re-pay a Python worker on every later broadcast
-            # build; the parquet read-back is a trivial JVM scan.
-            # Dimension-only data, removed at interpreter exit.
-            import atexit
-            import shutil
-            import tempfile
+    # key union + left joins rather than chained full_outer: full outer
+    # can't broadcast (it would plan lookup-side SortMergeJoins); left
+    # joins of dimension-sized frames stay BroadcastHashJoin all the way
+    # down, keeping the whole enrich plan shuffle-free.
+    keys = ip_lookups[0].select("_ipk")
+    for lk in ip_lookups[1:]:
+        keys = keys.union(lk.select("_ipk"))
+    combined = keys.distinct()
+    for lk in ip_lookups:
+        combined = combined.join(F.broadcast(lk), "_ipk", "left")
+    # session-temp parquet round-trip, NOT createDataFrame(rows): a
+    # rows-list frame scans through a pickled Python RDD and would re-pay
+    # a Python worker on every later broadcast build; the parquet
+    # read-back is a trivial JVM scan. Dimension-only data, removed at
+    # interpreter exit.
+    import atexit
+    import shutil
+    import tempfile
 
-            d = tempfile.mkdtemp(prefix="lb_combined_lookup_")
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-            combined.coalesce(1).write.mode("overwrite").parquet(d)
-            lookups[cache_key] = df.sparkSession.read.parquet(d)
-        combined = lookups[cache_key]
-        df = df.join(
-            F.broadcast(combined), df["_join_ip"] == combined["_ipk"], "left"
-        ).drop("_ipk")
-
-    # --- threat intel (J3+J4+A1) -----------------------------------------
-    ti_out = []
-    if use_ti:
-        # every array op happened lookup-side in ti_by_ip; per fact row
-        # this is just a flag-picked string coalesce. Semantics preserved:
-        # dc + ti-hit → merged lists; dc + no-hit → the DC entry alone
-        # (old code's concat-with-empty path); no-dc + no-hit → none/0.
-        is_dc = F.col("_is_dc")
-        ti_out = [
-            _sentinel(
-                F.when(
-                    is_dc, F.coalesce(F.col("_ti_cats_dc_str"), F.lit(_DC_CATEGORY))
-                ).otherwise(F.coalesce(F.col("_ti_cats_str"), F.lit("none")))
-            ).alias("lb_ThreatCategories"),
-            _sentinel(
-                F.when(
-                    is_dc, F.coalesce(F.col("_ti_nfeeds_dc_str"), F.lit("1"))
-                ).otherwise(F.coalesce(F.col("_ti_nfeeds_str"), F.lit("0")))
-            ).alias("lb_ThreatFeedCount"),
-            _sentinel(
-                F.when(
-                    is_dc, F.coalesce(F.col("_ti_feeds_dc_str"), F.lit(_DC_FEED))
-                ).otherwise(F.coalesce(F.col("_ti_feeds_str"), F.lit("none")))
-            ).alias("lb_ThreatFeeds"),
-        ]
-
-    # --- DNS + TLD (J5+J6) ------------------------------------------------
-    dns_out = []
-    if use_dns:
-        df = df.withColumn("_tld", F.when(pub, F.col("_tld_lk")))
-        dns_out = [
-            _sentinel(
-                F.coalesce(F.col("_domains_str"), F.lit("none"))
-            ).alias("lb_Domains"),
-            _sentinel(F.coalesce(F.col("_tld"), F.lit("none"))).alias("lb_TLD"),
-        ]
-
-    # --- WHOIS domain (J7) -------------------------------------------------
-    wd_out = []
-    if use_whois and use_dns:
-        wd = lookups["whois_domain"].select(
-            F.col("domain").alias("_wd_domain"),
-            F.col("created").alias("_wd_created"),
-            F.col("updated").alias("_wd_updated"),
-            F.col("country").alias("_wd_country"),
-            F.col("org").alias("_wd_org"),
-        )
-        has_domain = F.col("_tld").isNotNull() & (F.col("_tld") != "none")
-        df = df.join(
-            F.broadcast(wd),
-            F.when(has_domain, F.col("_tld")) == wd["_wd_domain"],
-            "left",
-        )
-        # valid domain + lookup miss → "err" (live lookup failed);
-        # no domain at all → "NA" (lookup skipped, helpers.go:469-473)
-        for src, name in zip(
-            ["_wd_created", "_wd_updated", "_wd_country", "_wd_org"],
-            WHOIS_DOMAIN_FIELDS,
-        ):
-            wd_out.append(
-                _sentinel(
-                    F.when(~has_domain, F.lit("NA")).otherwise(
-                        F.coalesce(F.col(src), F.lit("err"))
-                    )
-                ).alias(name)
-            )
-
-    # --- WHOIS IP (J8) -------------------------------------------------------
-    wi_out = []
-    if use_whois:
-        for src, name in zip(
-            ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"],
-            WHOIS_IP_FIELDS,
-        ):
-            wi_out.append(
-                _sentinel(F.coalesce(F.col(f"_wi_{src}"), F.lit("err"))).alias(name)
-            )
-
-    # --- Shodan InternetDB (J9) ----------------------------------------------
-    idb_out = []
-    if use_idb:
-        for src, name in zip(
-            ["cpes", "hostnames", "ports", "tags", "vulns"], IDB_FIELDS
-        ):
-            idb_out.append(
-                _sentinel(F.coalesce(F.col(f"_idb_{src}"), F.lit("err"))).alias(name)
-            )
-
-    keep = [c for c in out_cols if not c.startswith("_") and c != "domains"]
-    return df.select(
-        *keep,
-        F.col("_cls").alias("lb_class"),
-        *geo_out,
-        *ti_out,
-        *dns_out,
-        *wd_out,
-        *wi_out,
-        *idb_out,
-    )
-
-
+    d = tempfile.mkdtemp(prefix="lb_combined_lookup_")
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    combined.coalesce(1).write.mode("overwrite").parquet(d)
+    lookups[cache_key] = combined.sparkSession.read.parquet(d)
+    return lookups[cache_key]

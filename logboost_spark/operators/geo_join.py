@@ -159,17 +159,33 @@ def range_lookup_join(
     is BroadcastHashJoin on the bucket with the BETWEEN as join residual —
     verify with ``.explain()``.
     """
+    return compile_range_lookup(ip_long, lookup, attrs, bucket_bits, prefix)(fact)
+
+
+def compile_range_lookup(
+    ip_long: Column,
+    lookup: DataFrame,
+    attrs: list[str],
+    bucket_bits: int = DEFAULT_BUCKET_BITS,
+    prefix: str = "",
+):
+    """:func:`range_lookup_join` with the bucketed lookup side and the join
+    condition built once; returns ``bind(fact)``."""
     shift = 32 - bucket_bits
     b = bucketize_intervals(lookup, bucket_bits)
     sel = [F.col("_bucket"), F.col("net_start"), F.col("net_end")] + [
         F.col(a).alias(f"{prefix}{a}") for a in attrs
     ]
     b = b.select(*sel)
-    fact = fact.withColumn("_ip_long_join", ip_long)
     cond = (
         (F.shiftright(F.col("_ip_long_join"), shift) == b["_bucket"])
         & (F.col("_ip_long_join") >= b["net_start"])
         & (F.col("_ip_long_join") <= b["net_end"])
     )
-    out = fact.join(F.broadcast(b), cond, "left")
-    return out.drop("_bucket", "net_start", "net_end", "_ip_long_join")
+    side = F.broadcast(b)
+
+    def bind(fact: DataFrame) -> DataFrame:
+        out = fact.withColumn("_ip_long_join", ip_long).join(side, cond, "left")
+        return out.drop("_bucket", "net_start", "net_end", "_ip_long_join")
+
+    return bind

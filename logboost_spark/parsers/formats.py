@@ -325,7 +325,17 @@ def parse_stage(
     kv_separator: str = KV_SEPARATOR_DEFAULT,
     kv_delimiter: str = KV_DELIMITER_DEFAULT,
 ) -> DataFrame:
-    """Append ``format`` + ``fields`` columns (the P1-P11 parse stage).
+    """Append ``format`` + ``fields`` columns (the P1-P11 parse stage) —
+    :func:`compile_parse` bound to ``df``."""
+    return compile_parse(text_col, kv_separator, kv_delimiter)(df)
+
+
+def compile_parse(
+    text_col: str = "text",
+    kv_separator: str = KV_SEPARATOR_DEFAULT,
+    kv_delimiter: str = KV_DELIMITER_DEFAULT,
+):
+    """Build the parse stage's two Columns once; return ``bind(df)``.
 
     Spark hoists pandas UDFs out of ``when`` branches (ArrowEvalPython
     can't be conditional), so json_flatten executes for EVERY row — but
@@ -337,7 +347,7 @@ def parse_stage(
     input stage — the masked single pass keeps one scan.)
     """
     t = F.col(text_col)
-    df = df.withColumn("format", detect_format(t, kv_separator, kv_delimiter))
+    fmt_col = detect_format(t, kv_separator, kv_delimiter)
     fmt = F.col("format")
     is_json = fmt.isin("json", "json_multi")
     empty = F.map_from_arrays(
@@ -355,7 +365,12 @@ def parse_stage(
         .when(fmt == "kv", _kv(t, kv_separator, kv_delimiter))
         .otherwise(empty)
     )
-    return df.withColumn("fields", F.coalesce(fields, empty))
+    fields_col = F.coalesce(fields, empty)
+
+    def bind(df: DataFrame) -> DataFrame:
+        return df.withColumn("format", fmt_col).withColumn("fields", fields_col)
+
+    return bind
 
 
 def explode_multi_json(df: DataFrame, text_col: str = "text") -> DataFrame:

@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
@@ -34,9 +35,38 @@ def _manifest_path(out_dir: str, group: int) -> str:
     return os.path.join(out_dir, MANIFEST_DIR, f"group-{group:04d}.json")
 
 
+def _read_manifest(path: str) -> dict | None:
+    """A manifest's entry, or None when the file is not a complete one
+    (truncated or garbled by a crash mid-write, or by an older writer
+    without the atomic rename): such a group is NOT committed."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _write_manifest(path: str, entry: dict) -> None:
+    """The commit point: write a temp file, fsync it, atomically rename it
+    over ``path`` and fsync the directory, so a crash leaves either no
+    manifest or a complete one — never a truncated one that would count
+    as committed."""
+    tmp = os.path.join(os.path.dirname(path), "." + os.path.basename(path) + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(entry, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+    fd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
+
 def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
-    """Groups with a committed manifest. When ``n_groups`` is given,
-    REFUSES manifests written under a different bucketing: group
+    """Groups with a complete committed manifest. When ``n_groups`` is
+    given, REFUSES manifests written under a different bucketing: group
     membership is pmod(xxhash64(conv_id), n_groups), so resuming with a
     changed group count would silently skip or double-write
     conversations."""
@@ -47,18 +77,18 @@ def committed_groups(out_dir: str, n_groups: int | None = None) -> set[int]:
     for name in os.listdir(mdir):
         if name.startswith("group-") and name.endswith(".json"):
             g = int(name[6:-5])
-            if n_groups is not None:
-                with open(os.path.join(mdir, name)) as f:
-                    entry = json.load(f)
-                rec = entry.get("n_groups")
-                if rec is not None and rec != n_groups:
-                    raise ValueError(
-                        f"{out_dir}: manifest group-{g:04d} was committed with "
-                        f"n_groups={rec}, resume requested n_groups={n_groups} — "
-                        "refusing (bucketing mismatch would skip/double-write "
-                        "conversations); use the original group count or a "
-                        "fresh out_dir"
-                    )
+            entry = _read_manifest(os.path.join(mdir, name))
+            if entry is None:
+                continue
+            rec = entry.get("n_groups")
+            if n_groups is not None and rec is not None and rec != n_groups:
+                raise ValueError(
+                    f"{out_dir}: manifest group-{g:04d} was committed with "
+                    f"n_groups={rec}, resume requested n_groups={n_groups} — "
+                    "refusing (bucketing mismatch would skip/double-write "
+                    "conversations); use the original group count or a "
+                    "fresh out_dir"
+                )
             out.add(g)
     return out
 
@@ -89,77 +119,85 @@ def _adaptive_partitions_per_group(routed: DataFrame, n_groups: int) -> int:
     return max(floor, need)
 
 
+def group_rows(
+    source: Callable[[], DataFrame],
+    finish: Callable[[DataFrame], DataFrame],
+    group: int,
+    n_groups: int,
+    partitions_per_group: int,
+    salt_buckets: int = 64,
+    group_col_name: str | None = None,
+) -> DataFrame:
+    """One commit group's routed rows, built from a fresh ``source()``:
+    the group's slice, the salted exchange, then ``finish`` on the
+    shuffled partitions. This is each group job's plan in
+    :func:`write_routed` (before its observe, sort and write)."""
+    if group_col_name:
+        sub = source().filter(F.col(group_col_name).cast("bigint") == group)
+        sub = sub.drop(group_col_name)
+    else:
+        sub = source().filter(F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)) == group)
+    sub = salted_repartition(sub, partitions_per_group, salt_buckets, sort_cols=None)
+    return finish(sub)
+
+
 def write_routed(
-    routed: DataFrame,
+    source: Callable[[], DataFrame],
+    finish: Callable[[DataFrame], DataFrame],
     out_dir: str,
     n_groups: int = 8,
     resume: bool = False,
     partitions_per_group: int | None = None,
     salt_buckets: int = 64,
-    reuse_plan: bool = False,
     group_col_name: str | None = None,
-    post_shuffle=None,
-    routed_factory=None,
 ) -> list[dict]:
-    """Write a routed DataFrame to per-sink parquet with group commits.
+    """Route to per-sink parquet with group commits.
 
     Each commit group is its own Spark job (that's what makes the commit
-    granular and the run resumable), so naively the upstream plan runs
-    n_groups times. ``reuse_plan`` persists the routed frame once and
-    lets every group job read from it — measured NET-NEGATIVE here
-    (map-column rows blow up the heap and GC costs more than the
-    recompute saves), so it defaults off.
+    granular and the run resumable), built by :func:`group_rows` from a
+    fresh ``source()``: the slim pre-shuffle rows (raw columns plus the
+    extraction keys, for the transcript pipeline). The salted exchange
+    moves THOSE, and ``finish(df)`` (broadcast joins / parse / sentinel
+    formatting — must be deterministic, per-row, and must produce the
+    ``sink`` column) runs on the shuffled partitions (guide §2.3 / §8:
+    decide placement with small rows, move heavy formatting after the
+    exchange); the (sink, conv_id, turn_idx) sort then runs directly
+    above the write so the dynamic-partition writer sees sorted input.
+
+    Each group job calls ``source()`` and ``finish`` itself, so the plan
+    nodes they add are its own: two jobs in flight share only the input
+    plan ``source`` starts from (shared Catalyst expression trees bled
+    values cross-row under concurrent execution: ~1 corrupted row per
+    2k-row run, so that input should be a plain scan). ``source`` and
+    ``finish`` may reuse prebuilt Columns — each Dataset converts a
+    Column into its own expression instances.
 
     The production path is ``group_col_name``: when the SOURCE layout is
     bucket-partitioned by commit group (Iceberg `bucket(conv_id)` — or a
     parquet partition column locally), pass that column's name and each
-    group job's filter can become partition PRUNING at the scan, so the
-    n_groups jobs touch each input row exactly once overall. Pruning
-    reaches the scan when no barrier sits between scan and filter — with
-    enrich's default extraction localCheckpoint (a LogicalRDD the filter
-    cannot push below) the input is instead touched once via the
-    checkpoint cache; pass ``barrier=False`` to enrich (or use the
-    Iceberg layout, where the filter prunes at snapshot planning) for
-    true scan-level pruning. Either way each input row is read once.
-    The column must hold pmod(xxhash64(conv_id), n_groups) (conv_id
-    never straddles groups); the fallback computes exactly that
-    expression on the fly for unpartitioned sources — same values, just
-    no pruning. The stored column's range is VALIDATED against this
-    run's n_groups before any group job: a source partitioned with more
-    groups than the run (e.g. written with pmod(...,8) but n_groups=4)
-    would otherwise silently drop every row with group >= n_groups from
-    all sinks while manifests still commit.
-
-    ``post_shuffle`` is the byte-diet hook (guide §2.3 / §8: decide
-    placement with small rows, move heavy formatting after the
-    exchange): when given, ``routed`` carries only slim pre-format
-    columns, the salted exchange moves THOSE, and ``post_shuffle(df)``
-    (broadcast joins / parse / sentinel formatting — must be
-    deterministic, per-row, and must produce the ``sink`` column) runs
-    on the shuffled partitions; the (sink, conv_id, turn_idx) sort then
-    runs directly above the write so the dynamic-partition writer sees
-    sorted input either way. Row-for-row identical output, ~40% fewer
-    shuffle bytes for the transcript pipeline.
-
-    ``routed_factory`` (no-arg → DataFrame equivalent to ``routed``):
-    REQUIRED for correct results when group jobs overlap and ``routed``
-    carries non-trivial expressions. Spark expression trees hold mutable
-    evaluation state, and two concurrently executing jobs built from the
-    SAME driver-side tree instances produce cross-row value bleed
-    (reproduced: ~1 corrupted row per 2k-row run with the extraction
-    expressions shared between 2 in-flight group jobs; 0 in 25 runs with
-    per-job trees). Each concurrent group job therefore derives its own
-    fresh tree from the factory; without a factory, overlapping is
-    disabled and groups run sequentially.
+    group job's filter becomes partition PRUNING at the scan, so the
+    n_groups jobs touch each input row exactly once overall. The column
+    must hold pmod(xxhash64(conv_id), n_groups) (conv_id never straddles
+    groups); the fallback computes exactly that expression on the fly
+    for unpartitioned sources — same values, just no pruning. The stored
+    column's range is VALIDATED against this run's n_groups before any
+    group job: a source partitioned with more groups than the run (e.g.
+    written with pmod(...,8) but n_groups=4) would otherwise silently
+    drop every row with group >= n_groups from all sinks while manifests
+    still commit.
 
     Returns the manifest entries written this run.
     """
     os.makedirs(os.path.join(out_dir, MANIFEST_DIR), exist_ok=True)
     done = committed_groups(out_dir, n_groups=n_groups) if resume else set()
-    if group_col_name and len(done) < n_groups:
+    todo = [g for g in range(n_groups) if g not in done]
+    if not todo:
+        return []
+    probe = source()  # for validation, sizing and the session; no job writes it
+    if group_col_name:
         gc = F.col(group_col_name).cast("bigint")
         bad = (
-            routed.filter(gc.isNull() | (gc < 0) | (gc >= n_groups))
+            probe.filter(gc.isNull() | (gc < 0) | (gc >= n_groups))
             .select(group_col_name)
             .limit(1)
             .collect()
@@ -175,48 +213,20 @@ def write_routed(
                 "would be silently dropped from every sink. Re-run with the "
                 "source's original group count or re-bucket the source."
             )
-    if reuse_plan and len(done) < n_groups:
-        routed = routed.persist()
-    if post_shuffle is not None and partitions_per_group is None:
-        partitions_per_group = _adaptive_partitions_per_group(routed, n_groups)
+    if partitions_per_group is None:
+        partitions_per_group = _adaptive_partitions_per_group(probe, n_groups)
+    counters = [F.count(F.lit(1)).alias("rows")] + [
+        F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"rows_{s}")
+        for s in SINKS
+    ]
 
     def _run_group(g: int) -> dict:
-        # fresh per-job lineage (see routed_factory note above) + a
-        # per-job group-col expression: no tree instance is shared with
-        # another in-flight job
-        # reuse_plan pins the persisted shared frame, so it stays on the
-        # sequential path (see the concurrency condition below)
-        src = (
-            routed_factory()
-            if routed_factory is not None and not reuse_plan
-            else routed
-        )
-        gcol = (
-            F.col(group_col_name).cast("bigint")
-            if group_col_name
-            else F.pmod(F.xxhash64("conv_id"), F.lit(n_groups))
-        )
-        sub = src.filter(gcol == g)
-        if group_col_name:
-            sub = sub.drop(group_col_name)
         obs = Observation(f"group-{g}")
-        counters = [F.count(F.lit(1)).alias("rows")] + [
-            F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"rows_{s}")
-            for s in SINKS
-        ]
-        if post_shuffle is None:
-            sub = sub.observe(obs, *counters)
-            sub = salted_repartition(
-                sub, partitions_per_group, salt_buckets,
-                sort_cols=("sink", "conv_id", "turn_idx"),
-            )
-        else:
-            sub = salted_repartition(
-                sub, partitions_per_group, salt_buckets, sort_cols=None
-            )
-            sub = post_shuffle(sub)
-            sub = sub.observe(obs, *counters)
-            sub = sub.sortWithinPartitions("sink", "conv_id", "turn_idx")
+        sub = group_rows(
+            source, finish, g, n_groups, partitions_per_group, salt_buckets,
+            group_col_name,
+        )
+        sub = sub.observe(obs, *counters).sortWithinPartitions("sink", "conv_id", "turn_idx")
         t0 = time.time()
         target = os.path.join(out_dir, "data", f"group={g}")
         sub.write.partitionBy("sink").mode("overwrite").parquet(target)
@@ -253,10 +263,9 @@ def write_routed(
             "wall_sec": round(time.time() - t0, 3),
             **metrics,
         }
-        # manifest write is the commit point — crash before this line
-        # leaves the group uncommitted and it is redone (overwrite) on resume
-        with open(_manifest_path(out_dir, g), "w") as f:
-            json.dump(entry, f)
+        # crash before the manifest lands leaves the group uncommitted
+        # and it is redone (overwrite) on resume
+        _write_manifest(_manifest_path(out_dir, g), entry)
         return entry
 
     # Overlap independent group jobs (guide §2.6): commit groups touch
@@ -267,22 +276,15 @@ def write_routed(
     # unchanged — each group still writes its own manifest only after
     # its own write completes; a crash leaves at most the in-flight
     # groups uncommitted and resume redoes them.
-    todo = [g for g in range(n_groups) if g not in done]
-    manifests: list[dict] = []
-    if len(todo) > 1 and routed_factory is not None and not reuse_plan:
-        from concurrent.futures import ThreadPoolExecutor
+    if len(todo) == 1:
+        return [_run_group(todo[0])]
+    from concurrent.futures import ThreadPoolExecutor
 
-        from pyspark import inheritable_thread_target
+    from pyspark import inheritable_thread_target
 
-        spark = routed.sparkSession
-        target_fn = inheritable_thread_target(spark)(_run_group)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            manifests = list(pool.map(target_fn, todo))
-    else:
-        manifests = [_run_group(g) for g in todo]
-    if reuse_plan:
-        routed.unpersist()
-    return manifests
+    target_fn = inheritable_thread_target(probe.sparkSession)(_run_group)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        return list(pool.map(target_fn, todo))
 
 
 def read_sinks(spark, out_dir: str) -> DataFrame:
@@ -293,15 +295,17 @@ def read_sinks(spark, out_dir: str) -> DataFrame:
 
 
 def sink_counts(spark, out_dir: str) -> dict[str, int]:
-    """Aggregate per-sink row counts from the lineage manifests alone —
-    no data re-scan (the A3-style verified aggregate)."""
+    """Aggregate per-sink row counts from the committed lineage manifests
+    alone — no data re-scan (the A3-style verified aggregate). A manifest
+    that is not complete is not a commit and counts nothing."""
     mdir = os.path.join(out_dir, MANIFEST_DIR)
     totals: dict[str, int] = {s: 0 for s in SINKS}
     for name in sorted(os.listdir(mdir)):
-        if not name.endswith(".json"):
+        if not (name.startswith("group-") and name.endswith(".json")):
             continue
-        with open(os.path.join(mdir, name)) as f:
-            e = json.load(f)
+        e = _read_manifest(os.path.join(mdir, name))
+        if e is None:
+            continue
         for s in SINKS:
             totals[s] += int(e.get(f"rows_{s}", 0) or 0)
     return totals

@@ -9,13 +9,14 @@ parallelism (SURVEY.md §3.1).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.goformat import go_layout_to_jvm
-from ..parsers.formats import parse_stage
+from ..operators.enrich import compile_extract, compile_joins
+from ..parsers.formats import compile_parse
 from .checkpoint import write_routed
-from .route import route_stage
+from .route import route_category
 
 
 def date_filter(
@@ -27,14 +28,75 @@ def date_filter(
 ) -> DataFrame:
     """F1 semantics (helpers/helpers.go:253-265): keep start ≤ ts ≤ end
     (inclusive both ends); rows whose timestamp fails to parse are KEPT."""
-    col = F.col(date_col)
+    return df.filter(date_range(F.col(date_col), go_layout, start, end))
+
+
+def date_range(col: Column, go_layout: str | None, start: str, end: str) -> Column:
+    """:func:`date_filter`'s keep predicate over ``col``."""
     ts = (
         F.to_timestamp(col)
         if go_layout is None
         else F.try_to_timestamp(col.cast("string"), F.lit(go_layout_to_jvm(go_layout)))
     )
-    keep = ts.isNull() | ts.between(F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp"))
-    return df.filter(keep)
+    return ts.isNull() | ts.between(F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp"))
+
+
+class CompiledPipeline:
+    """Every stage's Columns plus the prepared broadcast sides, built once.
+
+    Building the pipeline's expressions in Python costs thousands of py4j
+    round trips (several per expression node); binding prebuilt Columns
+    to a DataFrame costs a few per stage. :meth:`extract` and :meth:`finish`
+    bind the stages to whatever frame they are given, so every commit-group
+    job of one :func:`run_pipeline` call and every micro-batch of one
+    streaming query gets its own plan from the same Columns. That is safe
+    under concurrency: a Column is an immutable expression AST, and each
+    Dataset converts it into fresh Catalyst expression instances, so two
+    plans bound from one CompiledPipeline share no expression trees.
+    """
+
+    def __init__(
+        self,
+        lookups: dict[str, DataFrame],
+        do_parse: bool,
+        kv_separator: str,
+        kv_delimiter: str,
+        raw_fallthrough: bool = True,
+        text_col: str = "text",
+        ip_col_name: str | None = None,
+        json_col_name: str | None = None,
+        **join_flags,
+    ):
+        self.extract = compile_extract(text_col, ip_col_name, json_col_name)
+        self._joins = compile_joins(lookups, **join_flags)
+        self._parse = (
+            compile_parse(kv_separator=kv_separator, kv_delimiter=kv_delimiter)
+            if do_parse
+            else None
+        )
+        # reference main.go:442: content with no recognized parser is
+        # processed as raw ONLY under -getall/-rawtxt; otherwise it is
+        # skipped (per-file there, per-line in this engine's model)
+        self._parsed_only = (
+            F.col("format") != "raw" if do_parse and not raw_fallthrough else None
+        )
+        self._sink = route_category()
+
+    def parse(self, df: DataFrame) -> DataFrame:
+        """The parse stage, dropping unparsed rows unless raw falls through."""
+        out = self._parse(df)
+        return out if self._parsed_only is None else out.filter(self._parsed_only)
+
+    def finish(self, df: DataFrame, project=None) -> DataFrame:
+        """Joins → parse → ``project`` (the -fullparse projection) → route,
+        over extraction output. ORDER MATTERS: parse after enrich so the
+        map<string,string> never rides a join's row copy."""
+        out = self._joins(df)
+        if self._parse is not None:
+            out = self.parse(out)
+            if project is not None:
+                out = project(out)
+        return out.withColumn("sink", self._sink)
 
 
 def run_pipeline(
@@ -44,12 +106,13 @@ def run_pipeline(
     out_dir: str,
     start: str | None = None,
     end: str | None = None,
+    date_col: str = "ts",
+    date_layout: str | None = None,
     resume: bool = False,
     n_groups: int = 8,
     partitions_per_group: int | None = None,
     do_parse: bool = True,
     raw_fallthrough: bool = True,
-    stage_barrier: bool = False,
     group_col_name: str | None = None,
     kv_separator: str = "=",
     kv_delimiter: str = ",",
@@ -58,96 +121,67 @@ def run_pipeline(
 ) -> list[dict]:
     """Full run; returns the lineage manifest entries written.
 
-    ``stage_barrier`` localCheckpoints the routed frame so group jobs
-    share one upstream computation — measured NET-NEGATIVE (3-4×) for
-    this pipeline: materializing wide map-typed rows costs more than
-    recomputing the codegen'd stages, same lesson as write_routed's
-    reuse_plan. Default off; the enrich-internal extraction barrier
-    (cheap, slim rows) stays on.
-    """
-    df = transcripts
-    if start is not None and end is not None:
-        df = date_filter(df, "ts", None, start, end)
-    # BYTE-DIET SHAPE (guide §2.3/§8, SURVEY §1.1): the per-group salted
-    # exchange moves only the raw columns + the slim extraction output
-    # (_ip/_cls/_join keys ≈ 30 B/row); the broadcast join pyramid, the
-    # fields map and every lb_* sentinel string are computed AFTER the
-    # shuffle, directly above each group's write — measured ~40% fewer
-    # shuffle bytes and the exchange doubles as the codegen barrier the
-    # old extraction localCheckpoint provided (fusing the extraction
-    # regexes with the join stage measured 3-20× slower). Every
-    # post-shuffle op is per-row deterministic, so output rows are
-    # identical; ORDER STILL MATTERS: parse after enrich so the
-    # map<string,string> never rides a join's row copy.
-    from ..operators.enrich import enrich_extract, enrich_joins
+    ``start``/``end`` keep rows with ``start ≤ date_col ≤ end`` as
+    :func:`date_filter` does (``date_layout``: the column's Go time
+    layout, None for a timestamp column).
 
+    The pipeline's expressions are built once per call, as a
+    :class:`CompiledPipeline`, and each commit-group job binds them — and
+    the date predicate — to its own plan over ``transcripts``. The one
+    plan all group jobs share is ``transcripts`` itself, so it should be
+    a plain scan: expressions a caller puts into it are shared by group
+    jobs running concurrently.
+    """
     if full_parse and not do_parse:
         raise ValueError(
             "full_parse=True requires do_parse=True: the -fullparse "
             "projection is over the parsed fields map (ADVICE r06)"
         )
-    extract_kw = {
-        k: enrich_flags.pop(k)
-        for k in ("text_col", "ip_col_name", "json_col_name")
-        if k in enrich_flags
-    }
-    enrich_flags.pop("barrier", None)  # the salted exchange IS the barrier here
+    compiled = CompiledPipeline(
+        lookups,
+        do_parse=do_parse,
+        raw_fallthrough=raw_fallthrough,
+        kv_separator=kv_separator,
+        kv_delimiter=kv_delimiter,
+        **enrich_flags,
+    )
+    in_range = None
+    if start is not None and end is not None:
+        in_range = date_range(F.col(date_col), date_layout, start, end)
 
-    def prepare() -> DataFrame:
-        # called once per commit-group job: overlapping jobs must NOT
-        # share driver-side expression tree instances (write_routed's
-        # routed_factory contract — shared trees bleed values cross-row
-        # under concurrent execution)
-        return enrich_extract(df, **extract_kw)
+    def scan() -> DataFrame:
+        return transcripts if in_range is None else transcripts.filter(in_range)
 
-    prepared = prepare()
-    full_keys: list[str] | None = None
-    if do_parse and full_parse:
+    project = None
+    if full_parse:
         # -fullparse (main.go:56): one column per key seen ANYWHERE in
         # the input. The key union must be GLOBAL (a per-group union
         # would give groups different schemas), so run the two-pass
         # aggregation over the whole input up front — fields depend only
         # on text, so this prunes to a text-only scan (the reference's
         # first full-file scan, parsers/extra_keys.deep_keys).
-        from ..parsers.extra_keys import deep_keys
+        from ..parsers.extra_keys import deep_keys, shallow_project
 
-        keyed = parse_stage(df, kv_separator=kv_separator, kv_delimiter=kv_delimiter)
-        if not raw_fallthrough:
-            keyed = keyed.filter(F.col("format") != "raw")
-        full_keys = deep_keys(keyed)
+        full_keys = deep_keys(compiled.parse(scan()))
 
-    def finish(part: DataFrame) -> DataFrame:
-        out = enrich_joins(part, lookups, **enrich_flags)
-        if do_parse:
-            out = parse_stage(
-                out, kv_separator=kv_separator, kv_delimiter=kv_delimiter
-            )
-            if not raw_fallthrough:
-                # reference main.go:442: content with no recognized
-                # parser is processed as raw ONLY under -getall/-rawtxt;
-                # otherwise it is skipped (per-file there, per-line in
-                # this engine's model)
-                out = out.filter(F.col("format") != "raw")
-            if full_keys is not None:
-                from ..parsers.extra_keys import shallow_project
+        def project(out: DataFrame) -> DataFrame:
+            return shallow_project(out, full_keys)
 
-                out = shallow_project(out, full_keys)
-        return route_stage(out)
-
-    factory = prepare
-    if stage_barrier:
-        # a shared checkpoint is the POINT of stage_barrier — group jobs
-        # must read the one materialization, so they run sequentially
-        # (no per-job fresh trees)
-        prepared = prepared.localCheckpoint(eager=False)
-        factory = None
+    # BYTE-DIET SHAPE (guide §2.3/§8, SURVEY §1.1): the per-group salted
+    # exchange moves only the raw columns + the slim extraction output
+    # (_ip/_cls/_join keys ≈ 30 B/row); the broadcast join pyramid, the
+    # fields map and every lb_* sentinel string are computed AFTER the
+    # shuffle, directly above each group's write — measured ~40% fewer
+    # shuffle bytes, and the exchange doubles as the codegen barrier
+    # between the extraction regexes and the join stage (fusing them
+    # measured 3-20× slower). Every post-shuffle op is per-row
+    # deterministic, so output rows are identical.
     return write_routed(
-        prepared,
+        lambda: compiled.extract(scan()),
+        lambda df: compiled.finish(df, project),
         out_dir,
         n_groups=n_groups,
         resume=resume,
         partitions_per_group=partitions_per_group,
         group_col_name=group_col_name,
-        post_shuffle=finish,
-        routed_factory=factory,
     )

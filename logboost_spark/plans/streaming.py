@@ -22,9 +22,11 @@ Scale notes: the streaming plan inherits the batch plan's properties —
 zero fact-side shuffles before the routed write, broadcast-only lookups
 (rebroadcast per micro-batch is tens of MBs), and the windowed agg
 shuffles only (window, sink) keys with state bounded by the watermark
-horizon. ``enrich(barrier=False)`` is REQUIRED: the batch path's
-localCheckpoint lineage cut is illegal in a streaming plan (and
-unnecessary — each micro-batch plan is analyzed once).
+horizon. :func:`stream_enriched` binds the stages with no
+localCheckpoint between extraction and joins: that lineage cut is
+illegal in a streaming plan (and unnecessary — each micro-batch plan
+is analyzed once). Both shapes build the stages' Columns once per
+query, as a ``plans.pipeline.CompiledPipeline``.
 """
 
 from __future__ import annotations
@@ -34,9 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.enrich import enrich
-from ..parsers.formats import parse_stage
-from .route import route_stage
+from .pipeline import CompiledPipeline
 
 #: transcript source schema (readStream cannot infer)
 TRANSCRIPT_DDL = (
@@ -108,12 +108,20 @@ def stream_enriched(
     per join at plan time — prefer :func:`stream_pipeline`'s
     foreachBatch form whenever the sink is a plain write."""
     src = _source_stream(spark, input_path, schema, max_files_per_trigger)
-    enrich_flags.setdefault("use_whois", False)
-    enrich_flags.setdefault("use_idb", False)
-    df = enrich(src, lookups, barrier=False, **enrich_flags)
-    if do_parse:
-        df = parse_stage(df, kv_separator=kv_separator, kv_delimiter=kv_delimiter)
-    return route_stage(df)
+    compiled = _compile(lookups, do_parse, kv_separator, kv_delimiter, enrich_flags)
+    return compiled.finish(compiled.extract(src))
+
+
+def _compile(lookups, do_parse, kv_separator, kv_delimiter, enrich_flags) -> CompiledPipeline:
+    """The streaming queries' pipeline: WHOIS and IDB off unless asked for."""
+    enrich_flags = {"use_whois": False, "use_idb": False, **enrich_flags}
+    return CompiledPipeline(
+        lookups,
+        do_parse=do_parse,
+        kv_separator=kv_separator,
+        kv_delimiter=kv_delimiter,
+        **enrich_flags,
+    )
 
 
 def stream_pipeline(
@@ -162,8 +170,7 @@ def stream_pipeline(
     routed_src = _source_stream(
         spark, input_path, schema, max_files_per_trigger
     )
-    enrich_flags.setdefault("use_whois", False)
-    enrich_flags.setdefault("use_idb", False)
+    compiled = _compile(lookups, do_parse, kv_separator, kv_delimiter, enrich_flags)
     data_dir = os.path.join(out_dir, "data")
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -177,10 +184,9 @@ def stream_pipeline(
         # stage (sampling, now()-style timestamps,
         # monotonically_increasing_id) here silently weakens the replay
         # to same-cardinality-different-rows.
-        df = enrich(batch_df, lookups, **enrich_flags)
-        if do_parse:
-            df = parse_stage(df, kv_separator=kv_separator, kv_delimiter=kv_delimiter)
-        route_stage(df).write.mode("overwrite").partitionBy("sink").parquet(
+        # the analysis barrier between extraction and the joins
+        df = compiled.extract(batch_df).localCheckpoint(eager=False)
+        compiled.finish(df).write.mode("overwrite").partitionBy("sink").parquet(
             os.path.join(data_dir, f"batch_id={batch_id}")
         )
 

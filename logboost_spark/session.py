@@ -69,6 +69,43 @@ _DEFAULTS = {
 }
 
 
+def _cgroup_value(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read().strip()
+    except OSError:
+        return None
+
+
+def host_cores() -> int:
+    """CPUs this process may use: the affinity mask, capped by a cgroup v2
+    CPU quota (``cpu.max``)."""
+    n = len(os.sched_getaffinity(0))
+    quota = _cgroup_value("/sys/fs/cgroup/cpu.max")
+    if quota and not quota.startswith("max"):
+        q, period = quota.split()
+        n = min(n, max(1, int(q) // int(period)))
+    return n
+
+
+def host_memory_mb() -> int:
+    """Physical memory in MiB, capped by a cgroup v2 limit (``memory.max``)."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    limit = _cgroup_value("/sys/fs/cgroup/memory.max")
+    if limit and limit.isdigit():
+        total = min(total, int(limit) // 2**20)
+    return total
+
+
+def default_driver_memory() -> str:
+    """A quarter of the host's (or cgroup's) memory, at least 1 GiB. In
+    local mode the driver heap also holds every executor task's memory,
+    and the JVM's resident size runs past ``-Xmx`` (metaspace, code cache,
+    direct buffers) while Python workers sit beside it, so a heap sized
+    near physical memory gets the process OOM-killed instead of GC'd."""
+    return f"{max(1024, host_memory_mb() // 4)}m"
+
+
 def get_spark(
     app_name: str = "logboost_spark",
     cores: int | None = None,
@@ -77,19 +114,23 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``cores`` defaults to $SPARK_GRAFT_CPUS or 32. ``shuffle_partitions``
-    defaults to 2× cores — on a real cluster you would size this to
-    total-cores × 2-3 and let AQE coalesce.
+    ``cores`` defaults to $SPARK_GRAFT_CPUS, else to the CPUs this process
+    may use (:func:`host_cores`). The driver heap defaults to
+    $SPARK_DRIVER_MEMORY, else to :func:`default_driver_memory`; an
+    ``extra_conf`` entry for ``spark.driver.memory`` wins over both.
+    ``shuffle_partitions`` defaults to 2× cores — on a real cluster you
+    would size this to total-cores × 2-3 and let AQE coalesce.
     """
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cores())
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cores, 8)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory)
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)

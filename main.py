@@ -295,22 +295,17 @@ def main(argv: list[str] | None = None) -> int:
         transcripts = read_log_directory(spark, args.input, getall=args.getall)
     else:
         transcripts = spark.read.parquet(args.input)
-    if args.startdate and args.enddate:
-        transcripts = date_filter(
-            transcripts, args.datecol, args.dateformat, args.startdate, args.enddate
-        )
+    # the date window applies only when both ends are given
+    window = (args.startdate, args.enddate) if args.startdate and args.enddate else (None, None)
     if args.stream:
         from logboost_spark.plans.streaming import stream_pipeline
 
-        # the stream path re-reads args.input inside the streaming source,
-        # so the batch date_filter above never applies — feed the SAME
-        # filter into each micro-batch via the pre_enrich hook
+        # the stream path reads args.input inside the streaming source —
+        # feed the date filter into each micro-batch via the pre_enrich hook
         pre = None
-        if args.startdate and args.enddate:
+        if window[0] is not None:
             def pre(df):  # noqa: E306
-                return date_filter(
-                    df, args.datecol, args.dateformat, args.startdate, args.enddate
-                )
+                return date_filter(df, args.datecol, args.dateformat, *window)
 
         stream_pipeline(
             spark,
@@ -357,6 +352,10 @@ def main(argv: list[str] | None = None) -> int:
         transcripts,
         lookups,
         args.output,
+        start=window[0],
+        end=window[1],
+        date_col=args.datecol,
+        date_layout=args.dateformat,
         resume=args.resume,
         n_groups=args.groups,
         group_col_name=args.group_col,

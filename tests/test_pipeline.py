@@ -199,8 +199,8 @@ def test_group_pruning_reaches_scan_without_barrier(spark, lookups, tmp_path):
     """With enrich's extraction barrier disabled, the per-group commit
     filter pushes all the way below enrich+parse+route to the parquet
     scan as a PartitionFilter — real scan-level pruning, not just a
-    post-scan filter (with the default barrier the input is instead
-    touched once via the localCheckpoint cache; see write_routed doc)."""
+    post-scan filter (a localCheckpoint is a LogicalRDD the filter
+    cannot push below)."""
     from pyspark.sql import functions as F
 
     from logboost_spark.operators.enrich import enrich
@@ -253,3 +253,183 @@ def test_concurrent_groups_no_cross_row_bleed(spark, lookups, tmp_path):
             .count()
         )
         assert bad == 0, f"trial {trial}: {bad} rows carry another row's lb_IP"
+
+
+def _canon_sinks(spark, out):
+    """Committed sink rows with the fields map made comparable."""
+    from pyspark.sql import functions as F
+
+    return read_sinks(spark, out).withColumn(
+        "fields",
+        F.to_json(F.map_from_entries(F.array_sort(F.map_entries("fields")))),
+    )
+
+
+def _same_rows(a, b):
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_truncated_manifest_is_not_committed(spark, lookups, tmp_path):
+    """A manifest cut short by a crash mid-write is not a commit: it is
+    neither reported by committed_groups nor counted by sink_counts, and
+    resume redoes that group to sinks identical to a fresh run."""
+    sdf = spark.createDataFrame(TR.gen_pandas(900))
+    flags = dict(n_groups=3, partitions_per_group=2, use_whois=False, use_idb=False)
+    fresh, out = str(tmp_path / "fresh"), str(tmp_path / "out")
+    run_pipeline(spark, sdf, lookups, fresh, **flags)
+    first = run_pipeline(spark, sdf, lookups, out, **flags)
+    mdir = os.path.join(out, "_manifest")
+    assert sorted(os.listdir(mdir)) == [f"group-{g:04d}.json" for g in range(3)]
+
+    path = os.path.join(mdir, "group-0001.json")
+    with open(path) as f:
+        text = f.read()
+    with open(path, "w") as f:
+        f.write(text[: len(text) // 2])
+    assert committed_groups(out) == {0, 2}
+    assert committed_groups(out, n_groups=3) == {0, 2}
+    lost = next(m for m in first if m["group"] == 1)
+    assert sum(sink_counts(spark, out).values()) == 900 - lost["rows"]
+
+    redo = run_pipeline(spark, sdf, lookups, out, resume=True, **flags)
+    assert [m["group"] for m in redo] == [1]
+    assert committed_groups(out, n_groups=3) == {0, 1, 2}
+    assert sink_counts(spark, out) == sink_counts(spark, fresh)
+    assert _same_rows(_canon_sinks(spark, out), _canon_sinks(spark, fresh))
+    assert sorted(os.listdir(mdir)) == [f"group-{g:04d}.json" for g in range(3)]
+
+
+def _plan_nodes(plan):
+    """Every node of a logical plan (py4j), depth first."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        out.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _expressions(nodes, skip):
+    """Every node of every expression of ``nodes`` (py4j), minus the
+    classes named in ``skip``."""
+    out, todo = [], []
+    for n in nodes:
+        es = n.expressions()
+        todo.extend(es.apply(i) for i in range(es.size()))
+    while todo:
+        e = todo.pop()
+        if e.getClass().getSimpleName() in skip:
+            continue
+        out.append(e)
+        kids = e.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _identity_set(jvm, objs):
+    """A JVM IdentityHashMap of ``objs``: membership by
+    System.identityHashCode and reference equality, not equals()."""
+    m = jvm.java.util.IdentityHashMap()
+    for o in objs:
+        m.put(o, True)
+    return m
+
+
+def test_group_jobs_share_no_expression_instances(spark, lookups, tmp_path, monkeypatch):
+    """The r07 cross-row-bleed race needs two in-flight group jobs to share
+    driver-side expression instances. Two group plans built by
+    write_routed's factory from one run's compiled pipeline, date filter
+    included, must not: every expression node of one analyzed plan is a
+    different JVM object from every node of the other (JVM identity,
+    System.identityHashCode plus reference equality). Excluded: the
+    subplans both jobs read by construction (the caller's plain scan and
+    the prepared lookup sides: plan nodes that are the same object in
+    both must lie inside them) and attribute references, which only name
+    those relations' columns."""
+    from logboost_spark.plans import pipeline
+    from logboost_spark.plans.checkpoint import group_rows
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(TR.gen_pandas(200)).write.parquet(src)
+    sdf = spark.read.parquet(src)
+    got = {}  # the (source, finish) pair run_pipeline hands to write_routed
+
+    def capture(source, finish, *args, **kwargs):
+        got.update(source=source, finish=finish)
+        return []
+
+    monkeypatch.setattr(pipeline, "write_routed", capture)
+    run_pipeline(
+        spark, sdf, lookups, str(tmp_path / "unused"), n_groups=2,
+        start="2000-01-01 00:00:00", end="2100-01-01 00:00:00",
+    )
+    jvm = spark.sparkContext._jvm
+
+    def analyzed(g):
+        df = group_rows(got["source"], got["finish"], g, 2, 2)
+        return df._jdf.queryExecution().analyzed()
+
+    nodes_a, nodes_b = _plan_nodes(analyzed(0)), _plan_nodes(analyzed(1))
+    in_a, in_b = _identity_set(jvm, nodes_a), _identity_set(jvm, nodes_b)
+    shared = [n for n in nodes_a if in_b.containsKey(n)]
+    # what both jobs may read: the caller's scan and every join's lookup side
+    roots = [sdf._jdf.queryExecution().analyzed()] + [
+        n.right() for n in nodes_a if n.getClass().getSimpleName() == "Join"
+    ]
+    relations = _identity_set(jvm, [n for r in roots for n in _plan_nodes(r)])
+    assert in_b.containsKey(roots[0]), "expected the scan to be shared"
+    assert all(relations.containsKey(n) for n in shared), (
+        "group plans share nodes above the scan and lookup relations"
+    )
+
+    skip = {"AttributeReference"}
+    exprs_a = _expressions([n for n in nodes_a if not in_b.containsKey(n)], skip)
+    exprs_b = _expressions([n for n in nodes_b if not in_a.containsKey(n)], skip)
+    assert len(exprs_a) > 500 and len(exprs_b) > 500
+    in_exprs_a = _identity_set(jvm, exprs_a)
+    both = [e.toString() for e in exprs_b if in_exprs_a.containsKey(e)]
+    assert not both, f"{len(both)} expression instances shared, e.g. {both[:3]}"
+
+
+def test_builders_run_once_per_run(spark, lookups, tmp_path, monkeypatch):
+    """run_pipeline builds its expressions once, however many commit-group
+    jobs bind them: a 3-group run calls each expression builder exactly
+    as often as a 1-group run, and writes the same rows."""
+    from logboost_spark.functions import ip
+    from logboost_spark.operators import enrich
+    from logboost_spark.parsers import formats
+
+    calls = {}
+
+    def counting(module, name):
+        real = getattr(module, name)
+
+        def wrapper(*a, **k):
+            calls[name] = calls.get(name, 0) + 1
+            return real(*a, **k)
+
+        monkeypatch.setattr(module, name, wrapper)
+
+    counting(formats, "detect_format")
+    for name in ("ipv4_to_long", "is_private_ipv4_long", "is_private_ipv6_str"):
+        counting(ip, name)
+    counting(enrich, "_sentinel")
+    sdf = spark.createDataFrame(TR.gen_pandas(600))
+    flags = dict(partitions_per_group=2, use_idb=False)
+    one, three = str(tmp_path / "one"), str(tmp_path / "three")
+
+    run_pipeline(spark, sdf, lookups, one, n_groups=1, **flags)
+    per_run = dict(calls)
+    assert set(per_run) == {
+        "detect_format", "ipv4_to_long", "is_private_ipv4_long",
+        "is_private_ipv6_str", "_sentinel",
+    }
+    assert per_run["detect_format"] == 1
+    calls.clear()
+    run_pipeline(spark, sdf, lookups, three, n_groups=3, **flags)
+    assert calls == per_run
+    assert sink_counts(spark, three) == sink_counts(spark, one)
+    assert _same_rows(
+        _canon_sinks(spark, three).drop("group"), _canon_sinks(spark, one).drop("group")
+    )
