@@ -21,9 +21,14 @@ table.
 
 from __future__ import annotations
 
+import atexit
 import ipaddress
 import os
-from functools import lru_cache
+import shutil
+import tempfile
+from collections.abc import Mapping
+from functools import cached_property, lru_cache
+from types import MappingProxyType
 
 # ---------------------------------------------------------------------------
 # IP pools (shared with the transcript generator)
@@ -210,7 +215,7 @@ def shodan_idb_rows() -> list[tuple]:
 # ---------------------------------------------------------------------------
 # Public-suffix parse: the real PSL matcher lives in functions/psl.py
 # (wildcards, exceptions, multi-label suffixes); re-exported here because
-# the fixture generators and the TLD UDF were built around this name.
+# the fixture generators were built around this name.
 # Every PSL_SUFFIXES entry above is a genuine public-suffix rule, so
 # fixture domains parse identically under the full list.
 # ---------------------------------------------------------------------------
@@ -223,148 +228,120 @@ from ..functions.psl import parse_psl_domain  # noqa: E402,F401
 # ---------------------------------------------------------------------------
 
 
-#: committed parquet fixtures (tools/build_fixtures.py) — same rows as
-#: the in-memory generators, byte-stable, and what the DuckDB oracle
-#: reads
+#: committed parquet fixtures (tools/build_fixtures.py): built from the
+#: row generators above (tests/test_lookup_fixtures.py checks that they
+#: still match), byte-stable, and what the DuckDB oracle reads
 LOOKUP_PARQUET_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
     "data",
     "lookups",
 )
 
+#: the dimension tables, one ``<name>.parquet`` each in a fixture directory
+LOOKUP_TABLES = (
+    "geo_asn",
+    "geo_city",
+    "geo_merged",
+    "ti",
+    "dc_asn",
+    "dns_ptr",
+    "whois_domain",
+    "whois_ip",
+    "shodan_idb",
+)
 
-#: one lookups dict per (session, dir): the dict doubles as the
-#: per-session cache slot for derived dimension tables (enrich's
-#: combined ip lookup, the dc-ASN literal list), so repeated
-#: build_lookup_dfs() callers share those instead of re-deriving them
-#: per query. Dimension fixtures only — never fact-derived results.
-_SESSION_LOOKUPS: dict[tuple, dict] = {}
 
+class PreparedLookups(Mapping):
+    """The dimension tables of one session, prepared once and immutable.
 
-def build_lookup_dfs(spark, parquet_dir: str | None = None):
-    """All lookup tables as small Spark DataFrames (broadcast-join sides).
-
-    Prefers the committed parquet fixtures: a DataFrame built with
-    ``createDataFrame(list_of_rows)`` scans through a pickled Python RDD,
-    so EVERY broadcast build (one per Spark action — per-group commit
-    jobs, bench reps, every enrich query) paid a Python-worker
-    round-trip per lookup; profiled at 4-8 s of near-zero-CPU task wait
-    per action (guide §4: keep the JVM↔Python boundary off hot paths).
-    The parquet scan is JVM-native and the files are built from the SAME
-    generators (tools/build_fixtures.py, byte-stable, oracle-shared).
-    The in-memory path remains as fallback for environments without the
-    fixture checkout.
-
-    CONTRACT: the returned dict is the per-session shared instance (it
-    doubles as the cache slot for derived dimension tables). Callers
-    that want to REPLACE an entry (e.g. main.py's --intelfile TI merge)
-    must take a shallow ``dict(...)`` copy first; adding private
-    derived-cache keys is fine.
+    Reads as a mapping of the base tables (``lookups["ti"]``) and refuses
+    item and attribute assignment. The tables enrich binds are derived on
+    first use and kept for the life of the object (:attr:`dc_asns`,
+    :attr:`combined_ip`). A variant with a custom TI feed is a new object
+    (:meth:`with_ti`), so it cannot leak into other callers of
+    :func:`build_lookup_dfs`.
     """
-    if parquet_dir is None:
-        parquet_dir = LOOKUP_PARQUET_DIR
-    cache_key = (id(spark), parquet_dir)
-    if cache_key in _SESSION_LOOKUPS:
-        return _SESSION_LOOKUPS[cache_key]
-    if os.path.isdir(parquet_dir):
-        def rd(name):
-            return spark.read.parquet(os.path.join(parquet_dir, f"{name}.parquet"))
 
-        out = {
-            # engine schema excludes builder-only extras (geo_asn.is_dc)
-            "geo_asn": rd("geo_asn").select(
-                "net_start", "net_end", "asn_org", "asn_number"
-            ),
-            "geo_city": rd("geo_city"),
-            "geo_merged": rd("geo_merged"),
-            "ti": rd("ti"),
-            "dc_asn": rd("dc_asn"),
-            # domains_joined/tld are precomputed by the builder with the
-            # same parse_psl_domain the tld_of UDF applies — carrying
-            # them lets enrich skip the per-action ArrowEvalPython
-            "dns_ptr": rd("dns_ptr"),
-            "whois_domain": rd("whois_domain"),
-            "whois_ip": rd("whois_ip"),
-            "shodan_idb": rd("shodan_idb"),
-        }
-    else:
-        out = _build_lookup_dfs_inmemory(spark)
-    _SESSION_LOOKUPS[cache_key] = out
-    return out
+    def __init__(self, tables):
+        object.__setattr__(self, "_tables", MappingProxyType(dict(tables)))
+
+    def __getitem__(self, name):
+        return self._tables[name]
+
+    def __iter__(self):
+        return iter(self._tables)
+
+    def __len__(self):
+        return len(self._tables)
+
+    def __setattr__(self, name, value):
+        raise AttributeError(f"PreparedLookups is immutable: cannot set {name!r}")
+
+    def __delattr__(self, name):
+        raise AttributeError(f"PreparedLookups is immutable: cannot delete {name!r}")
+
+    @cached_property
+    def dc_asns(self) -> list[int]:
+        """The datacenter ASNs as a literal list (enrich's ``isin`` test)."""
+        return [r[0] for r in self._tables["dc_asn"].collect()]
+
+    @cached_property
+    def combined_ip(self):
+        """Every IP-keyed lookup pre-joined into one ``_ipk``-keyed table
+        (:func:`..operators.enrich.combined_ip_table`), materialised once.
+
+        Without the materialisation every Spark action (each commit-group
+        job, every bench rep) re-ran the lookup-side pre-join: aggregation
+        exchanges and a union-distinct per broadcast build. It goes through
+        a temporary parquet directory, not ``createDataFrame(rows)``: a
+        rows-list frame scans through a pickled Python RDD and would start
+        a Python worker on every later broadcast build, while the
+        read-back is a one-file JVM scan. Dimension data only, removed at
+        interpreter exit."""
+        from ..operators.enrich import combined_ip_table
+
+        combined = combined_ip_table(self)
+        d = tempfile.mkdtemp(prefix="lb_combined_lookup_")
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
+        combined.coalesce(1).write.mode("overwrite").parquet(d)
+        return combined.sparkSession.read.parquet(d)
+
+    def with_ti(self, extra) -> PreparedLookups:
+        """A new set whose TI table also holds ``extra``'s (ip, feed_name,
+        category) rows (the CLI's ``--intelfile`` feed); ``self`` is
+        unchanged."""
+        ti = self._tables["ti"].unionByName(extra).dropDuplicates(
+            ["ip", "feed_name", "category"]
+        )
+        return PreparedLookups({**self._tables, "ti": ti})
 
 
-def _build_lookup_dfs_inmemory(spark):
-    """Fallback constructor from the in-memory row generators."""
-    from pyspark.sql import types as T
+def build_lookup_dfs(spark, parquet_dir: str | None = None) -> PreparedLookups:
+    """The dimension tables read from the parquet fixtures in
+    ``parquet_dir`` (default: the committed ones), as one
+    :class:`PreparedLookups` per (session, directory).
 
-    geo_asn = spark.createDataFrame(
-        geo_asn_rows(), "net_start bigint, net_end bigint, asn_org string, asn_number bigint"
-    )
-    geo_city = spark.createDataFrame(
-        geo_city_rows(), "net_start bigint, net_end bigint, country string, city string"
-    )
-    ti = spark.createDataFrame(ti_rows(), "ip string, feed_name string, category string")
-    dc_asn = spark.createDataFrame([(n,) for n in DC_ASN_NUMBERS], "asn_number bigint")
-    dns_ptr = spark.createDataFrame(
-        dns_ptr_rows(),
-        T.StructType(
-            [
-                T.StructField("ip", T.StringType()),
-                T.StructField("domains", T.ArrayType(T.StringType())),
-            ]
-        ),
-    )
-    whois_domain = spark.createDataFrame(
-        whois_domain_rows(), "domain string, created string, updated string, country string, org string"
-    )
-    whois_ip = spark.createDataFrame(
-        whois_ip_rows(),
-        "ip string, cidr string, netname string, nettype string, org string, "
-        "created string, updated string, country string, parent string",
-    )
-    shodan_idb = spark.createDataFrame(
-        shodan_idb_rows(),
-        T.StructType(
-            [
-                T.StructField("ip", T.StringType()),
-                T.StructField("cpes", T.ArrayType(T.StringType())),
-                T.StructField("hostnames", T.ArrayType(T.StringType())),
-                T.StructField("ports", T.ArrayType(T.IntegerType())),
-                T.StructField("tags", T.ArrayType(T.StringType())),
-                T.StructField("vulns", T.ArrayType(T.StringType())),
-            ]
-        ),
-    )
-    # The merged disjoint ASN+City interval table is itself a deterministic
-    # table build — computed here in pure Python from the SAME row
-    # generators (no DataFrame .collect() round-trip; at real GeoLite2
-    # size this is an offline fixture build, see tools/build_fixtures.py).
-    from ..operators.geo_join import flatten_intervals, merge_disjoint_interval_tables
+    Parquet, not ``createDataFrame(list_of_rows)``: a rows-list frame
+    scans through a pickled Python RDD, so every broadcast build (one per
+    Spark action) paid a Python-worker round trip per lookup, profiled at
+    4-8 s of near-idle task wait per action. A missing fixture raises
+    FileNotFoundError naming it.
+    """
+    return _prepare(spark, LOOKUP_PARQUET_DIR if parquet_dir is None else parquet_dir)
 
-    geo_merged = spark.createDataFrame(
-        merge_disjoint_interval_tables(
-            flatten_intervals(geo_asn_rows()),
-            flatten_intervals(geo_city_rows()),
-            n_a=2,
-            n_b=2,
-        ),
-        "net_start bigint, net_end bigint, asn_org string, "
-        "asn_number bigint, country string, city string",
+
+@lru_cache(maxsize=None)
+def _prepare(spark, parquet_dir: str) -> PreparedLookups:
+    paths = {name: os.path.join(parquet_dir, f"{name}.parquet") for name in LOOKUP_TABLES}
+    missing = [os.path.basename(p) for p in paths.values() if not os.path.exists(p)]
+    if missing:
+        raise FileNotFoundError(
+            f"lookup fixtures missing from {parquet_dir}: {', '.join(missing)} "
+            "(tools/build_fixtures.py writes them)"
+        )
+    tables = {name: spark.read.parquet(p) for name, p in paths.items()}
+    # the engine tests dc_asn membership itself; is_dc is the DuckDB oracle's column
+    tables["geo_asn"] = tables["geo_asn"].select(
+        "net_start", "net_end", "asn_org", "asn_number"
     )
-    out = {
-        "geo_asn": geo_asn,
-        "geo_city": geo_city,
-        "geo_merged": geo_merged,
-        "ti": ti,
-        "dc_asn": dc_asn,
-        "dns_ptr": dns_ptr,
-        "whois_domain": whois_domain,
-        "whois_ip": whois_ip,
-        "shodan_idb": shodan_idb,
-    }
-    # single-slice dimension frames: createDataFrame spreads even a
-    # 50-row lookup over defaultParallelism (32) partitions, so every
-    # broadcast BUILD was a 32-task job per Spark action — per-group
-    # commit jobs and bench reps each re-paid it (guide §1.1). One
-    # partition makes each build one trivial task; values unchanged.
-    return {k: v.coalesce(1) for k, v in out.items()}
+    return PreparedLookups(tables)

@@ -6,16 +6,18 @@ geo-ASN, geo-city, threat intel (+ datacenter-ASN merge), reverse DNS,
 TLD, WHOIS (domain + IP), Shodan InternetDB — appending the fixed
 ``lb_*`` column suffix with string sentinels on each miss path.
 
-Spark shape: ONE pass over the fact table with
-  * two prefix-bucketed broadcast range joins (geo ASN / city),
-  * five broadcast hash left joins (ti, dns_ptr, whois_domain, whois_ip,
-    shodan_idb),
-  * one ``isin`` literal membership test (dc ASN — ~800 values),
-  * one Arrow-batched pandas UDF (public-suffix TLD parse).
-No fact-side shuffle anywhere; every lookup side broadcasts. Private /
-no-IP rows carry null join keys, so they fall through every join for
-free and get sentinel-filled at the end (the reference's early-exit,
-expressed declaratively).
+Spark shape: ONE pass over the fact table with two broadcast probes,
+both against tables the session's PreparedLookups prepares once:
+  * one prefix-bucketed broadcast range join against the merged
+    geo ASN + city interval table,
+  * one broadcast hash left join against the combined IP-keyed table
+    (TI, reverse DNS with its precomputed TLD, WHOIS-IP, InternetDB,
+    and WHOIS-domain pre-joined on that TLD),
+plus one ``isin`` literal membership test (datacenter ASNs). No Python
+runs per row and no fact-side shuffle happens; every lookup side
+broadcasts. Private / no-IP rows carry null join keys, so they fall
+through both joins for free and get sentinel-filled at the end (the
+reference's early-exit, expressed declaratively).
 
 Sentinel matrix (see semantics.py for the ragged-row normalization note):
   no IP found / unparseable  → lb_IP="NoIP", every enrich col "NoIP"
@@ -32,8 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..fixtures.lookups import PreparedLookups
 from ..functions.ip import compile_ip_extract
-from ..functions.tld import tld_of
 from ..semantics import (
     DNS_FIELDS,
     GEO_FIELDS,
@@ -42,10 +44,11 @@ from ..semantics import (
     WHOIS_DOMAIN_FIELDS,
     WHOIS_IP_FIELDS,
 )
-from .geo_join import compile_range_lookup, flatten_intervals, merge_disjoint_interval_tables
+from .geo_join import compile_range_lookup
 
 _DC_CATEGORY = "dc"
 _DC_FEED = "internal datacenter list"
+_WHOIS_IP_SRC = ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"]
 
 
 def ti_by_ip(ti: DataFrame) -> DataFrame:
@@ -126,13 +129,12 @@ def compile_extract(
 
 def enrich(
     df: DataFrame,
-    lookups: dict[str, DataFrame],
+    lookups: PreparedLookups,
     text_col: str = "text",
     use_ti: bool = True,
     use_dns: bool = True,
     use_whois: bool = True,
     use_idb: bool = True,
-    dc_asn_numbers: list[int] | None = None,
     ip_col_name: str | None = None,
     json_col_name: str | None = None,
     barrier: bool = True,
@@ -171,7 +173,6 @@ def enrich(
         use_dns=use_dns,
         use_whois=use_whois,
         use_idb=use_idb,
-        dc_asn_numbers=dc_asn_numbers,
     )
 
 
@@ -184,35 +185,32 @@ def _sentinel(col, is_noip, is_pvt):
 
 def enrich_joins(
     df: DataFrame,
-    lookups: dict[str, DataFrame],
+    lookups: PreparedLookups,
     use_ti: bool = True,
     use_dns: bool = True,
     use_whois: bool = True,
     use_idb: bool = True,
-    dc_asn_numbers: list[int] | None = None,
 ) -> DataFrame:
-    """Phase 2 of enrich: broadcast join pyramid + lb_* output columns
+    """Phase 2 of enrich: the two broadcast probes + lb_* output columns
     (:func:`compile_joins` bound to ``df``).
 
     Expects the enrich_extract columns (``_ip``/``_cls``/``_join_ip``/
     ``_join_v4``) as real attributes on ``df``.
     """
-    return compile_joins(
-        lookups, use_ti, use_dns, use_whois, use_idb, dc_asn_numbers
-    )(df)
+    return compile_joins(lookups, use_ti, use_dns, use_whois, use_idb)(df)
 
 
 def compile_joins(
-    lookups: dict[str, DataFrame],
+    lookups: PreparedLookups,
     use_ti: bool = True,
     use_dns: bool = True,
     use_whois: bool = True,
     use_idb: bool = True,
-    dc_asn_numbers: list[int] | None = None,
 ):
-    """Prepare the broadcast sides and build every output Column of phase
-    2 once; return ``bind(df)``, which adds the joins and the lb_* select
-    to ``df`` in a handful of DataFrame calls."""
+    """Build every output Column of phase 2 once; return ``bind(df)``,
+    which adds the two broadcast probes and the lb_* select to ``df`` in
+    a handful of DataFrame calls. The flags pick output columns only:
+    every flag set probes the same prepared tables."""
     # Every Column below is built once per pipeline, and each Column API
     # call is several py4j round trips: share repeated sub-expressions
     # (a Column is an immutable AST) and name columns by string.
@@ -228,35 +226,9 @@ def compile_joins(
     # table is range-joined — and its rows re-copied — once instead of
     # twice. Row-for-row identical to two sequential left joins
     # (merge_disjoint_interval_tables docstring). The merged table is a
-    # PRECOMPUTED lookup (`geo_merged`, built offline with the other
-    # dimension fixtures — build_lookup_dfs / tools/build_fixtures.py):
-    # a full GeoLite2-City table is ~3M intervals, so merging it through
-    # the driver per session would be minutes of serial time. The
-    # fallback below exists only for callers that hand-roll a lookups
-    # dict; it selects attrs BY NAME (column order must not matter) and
-    # caches per-dict (single-session assumption, like every lookup DF).
-    if "geo_merged" not in lookups:
-        a_rows = flatten_intervals(
-            [
-                tuple(r)
-                for r in lookups["geo_asn"]
-                .select("net_start", "net_end", "asn_org", "asn_number")
-                .collect()
-            ]
-        )
-        b_rows = flatten_intervals(
-            [
-                tuple(r)
-                for r in lookups["geo_city"]
-                .select("net_start", "net_end", "country", "city")
-                .collect()
-            ]
-        )
-        lookups["geo_merged"] = lookups["geo_asn"].sparkSession.createDataFrame(
-            merge_disjoint_interval_tables(a_rows, b_rows, n_a=2, n_b=2),
-            "net_start bigint, net_end bigint, asn_org string, "
-            "asn_number bigint, country string, city string",
-        )
+    # fixture built offline (tools/build_fixtures.py): a full
+    # GeoLite2-City table is ~3M intervals, so merging it through the
+    # driver per session would be minutes of serial time.
     geo_join = compile_range_lookup(
         F.col("_join_v4"),
         lookups["geo_merged"],
@@ -265,11 +237,9 @@ def compile_joins(
     )
 
     # --- datacenter ASN membership (J4): literal set, codegen'd ---------
-    if dc_asn_numbers is None:
-        if "_dc_asn_numbers" not in lookups:
-            lookups["_dc_asn_numbers"] = [r[0] for r in lookups["dc_asn"].collect()]
-        dc_asn_numbers = lookups["_dc_asn_numbers"]
-    is_dc_col = F.coalesce(F.col("_g_asn_number").isin(dc_asn_numbers), F.lit(False))
+    is_dc_col = F.coalesce(
+        F.col("_g_asn_number").isin(lookups.dc_asns), F.lit(False)
+    )
 
     # --- geo output columns ---------------------------------------------
     geo_out = [
@@ -285,20 +255,16 @@ def compile_joins(
         sentinel(F.coalesce("_g_city", F.lit(""))).alias("lb_City"),
     ]
 
-    # --- ONE broadcast join for every ip-keyed lookup --------------------
-    # TI (J3), DNS (J5), IP-WHOIS (J8) and IDB (J9) all key on _join_ip.
-    # The lookups are dimension-sized with unique ip keys, so pre-joining
-    # them full-outer on the lookup side (key union) and LEFT-joining the
-    # fact table ONCE is row-for-row identical to the sequential left
-    # joins. Wall-clock parity locally (whole-stage codegen already fused
-    # the consecutive probes into one row build), but: one broadcast to
-    # ship instead of four, a shallower analyzed plan, and one probe per
-    # row instead of four — which matters whenever codegen fusion breaks
-    # (stage too wide, method split) or on executors where four separate
-    # broadcast relations would each hold memory.
+    # --- ONE broadcast probe for every ip-keyed lookup -------------------
+    # TI (J3), DNS (J5), WHOIS-IP (J8) and IDB (J9) all key on _join_ip,
+    # and WHOIS-domain (J7) keys on the TLD of the IP's first PTR record:
+    # the prepared combined table holds all five, one row per IP, so one
+    # left join is row-for-row identical to the sequential ones. It only
+    # matches public rows (_join_ip is null otherwise), so every _ti_*/
+    # _tld_lk/_wd_*/_wi_*/_idb_* column is null off the public path.
     combined = None
     if use_ti or use_dns or use_whois or use_idb:
-        combined = _combined_ip_lookup(lookups, use_ti, use_dns, use_whois, use_idb)
+        combined = lookups.combined_ip
         combined_side = F.broadcast(combined)
         combined_cond = F.col("_join_ip") == combined["_ipk"]
 
@@ -331,29 +297,18 @@ def compile_joins(
     # --- DNS + TLD (J5+J6) ------------------------------------------------
     dns_out = []
     if use_dns:
-        tld_col = F.when(cls == "pub", F.col("_tld_lk"))
         dns_out = [
             sentinel(
                 F.coalesce("_domains_str", F.lit("none"))
             ).alias("lb_Domains"),
-            sentinel(F.coalesce("_tld", F.lit("none"))).alias("lb_TLD"),
+            sentinel(F.coalesce("_tld_lk", F.lit("none"))).alias("lb_TLD"),
         ]
 
     # --- WHOIS domain (J7) -------------------------------------------------
     wd_out = []
     if use_whois and use_dns:
-        wd = lookups["whois_domain"].selectExpr(
-            "domain AS _wd_domain",
-            "created AS _wd_created",
-            "updated AS _wd_updated",
-            "country AS _wd_country",
-            "org AS _wd_org",
-        )
-        tld = F.col("_tld")
-        has_domain = tld.isNotNull() & (tld != "none")
-        no_domain = ~has_domain
-        wd_side = F.broadcast(wd)
-        wd_cond = F.when(has_domain, tld) == wd["_wd_domain"]
+        tld = F.col("_tld_lk")
+        no_domain = ~(tld.isNotNull() & (tld != "none"))
         # valid domain + lookup miss → "err" (live lookup failed);
         # no domain at all → "NA" (lookup skipped, helpers.go:469-473)
         for src, name in zip(
@@ -369,10 +324,7 @@ def compile_joins(
     # --- WHOIS IP (J8) -------------------------------------------------------
     wi_out = []
     if use_whois:
-        for src, name in zip(
-            ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"],
-            WHOIS_IP_FIELDS,
-        ):
+        for src, name in zip(_WHOIS_IP_SRC, WHOIS_IP_FIELDS):
             wi_out.append(
                 sentinel(F.coalesce(f"_wi_{src}", F.lit("err"))).alias(name)
             )
@@ -401,89 +353,42 @@ def compile_joins(
         df = geo_join(df).withColumn("_is_dc", is_dc_col)
         keep = [c for c in df.columns if not c.startswith("_") and c != "domains"]
         if combined is not None:
-            df = df.join(combined_side, combined_cond, "left").drop("_ipk")
-        if use_dns:
-            df = df.withColumn("_tld", tld_col)
-        if wd_out:
-            df = df.join(wd_side, wd_cond, "left")
+            df = df.join(combined_side, combined_cond, "left")
         return df.select(*keep, *lb_out)
 
     return bind
 
 
-def _combined_ip_lookup(
-    lookups: dict[str, DataFrame],
-    use_ti: bool,
-    use_dns: bool,
-    use_whois: bool,
-    use_idb: bool,
-) -> DataFrame:
-    """The ip-keyed lookups (TI, DNS, IP-WHOIS, IDB, as enabled) pre-joined
-    into one ``_ipk``-keyed table, materialised once per lookups dict."""
-    # The combined table is MATERIALIZED once per (lookups dict, flags):
-    # without this every Spark ACTION (each per-group commit job, every
-    # bench rep) re-ran the lookup-side pre-join — two aggregation
-    # exchanges, a union-distinct, and the tld_of ArrowEvalPython
-    # (spawning Python workers) — measured as tens of seconds of
-    # mostly-idle stage time per pipeline run (guide §1.1: the time was
-    # going to broadcast builds, not the fact scan). Dimension-sized
-    # (~1k rows), so the one-time driver collect is the same pattern as
-    # the precomputed geo_merged fixture; the re-created 1-partition
-    # frame makes every later broadcast build a single trivial task.
-    cache_key = ("_combined_ip", use_ti, use_dns, use_whois, use_idb)
-    if cache_key in lookups:
-        return lookups[cache_key]
-    ip_lookups: list[DataFrame] = []
-    if use_ti:
-        ip_lookups.append(ti_by_ip(lookups["ti"]).withColumnRenamed("ip", "_ipk"))
-    if use_dns:
-        dp_src = lookups["dns_ptr"]
-        if "domains_joined" in dp_src.columns and "tld" in dp_src.columns:
-            # fixture-precomputed columns (tools/build_fixtures.py runs
-            # the SAME parse_psl_domain): no per-action ArrowEvalPython,
-            # the dns lookup side stays all-JVM
-            dp = dp_src.select(
-                F.col("ip").alias("_ipk"),
-                F.col("domains_joined").alias("_domains_str"),
-                F.col("tld").alias("_tld_lk"),
-            )
-        else:
-            dp = dp_src.select(
-                F.col("ip").alias("_ipk"),
-                # pipe-join precomputed lookup-side (dimension rows), not
-                # per fact row
-                F.array_join("domains", "|").alias("_domains_str"),
-                # TLD parse on the LOOKUP side (dimension-sized): the
-                # fact table never touches Python — the pandas UDF runs
-                # once per PTR record before the broadcast. (Fact-side
-                # `when` branches would be hoisted by Spark and run on
-                # EVERY row.)
-                tld_of(F.get(F.col("domains"), 0)).alias("_tld_lk"),
-            )
-        ip_lookups.append(dp)
-    if use_whois:
-        ip_lookups.append(
-            lookups["whois_ip"].select(
-                F.col("ip").alias("_ipk"),
-                *[
-                    F.col(c).alias(f"_wi_{c}")
-                    for c in ["cidr", "netname", "nettype", "org", "created", "updated", "country", "parent"]
-                ],
-            )
-        )
-    if use_idb:
-        ip_lookups.append(
-            lookups["shodan_idb"].select(
-                F.col("ip").alias("_ipk"),
-                F.array_join("cpes", "|").alias("_idb_cpes"),
-                F.array_join("hostnames", "|").alias("_idb_hostnames"),
-                F.array_join(F.transform("ports", lambda x: x.cast("string")), "|").alias(
-                    "_idb_ports"
-                ),
-                F.array_join("tags", "|").alias("_idb_tags"),
-                F.array_join("vulns", "|").alias("_idb_vulns"),
-            )
-        )
+def combined_ip_table(lookups: PreparedLookups) -> DataFrame:
+    """TI, reverse DNS, WHOIS-IP and InternetDB pre-joined into one
+    ``_ipk``-keyed table, one row per IP in any of them, with every
+    per-row output string precomputed and the WHOIS-domain row of each
+    IP's TLD joined on. Lookup-side work only: dimension-sized, done once
+    per :class:`PreparedLookups` (its ``combined_ip`` materialises it)."""
+    ip_lookups = [
+        ti_by_ip(lookups["ti"]).withColumnRenamed("ip", "_ipk"),
+        # domains_joined/tld are fixture columns (tools/build_fixtures.py
+        # runs functions/psl.parse_psl_domain), so no Python runs here
+        lookups["dns_ptr"].select(
+            F.col("ip").alias("_ipk"),
+            F.col("domains_joined").alias("_domains_str"),
+            F.col("tld").alias("_tld_lk"),
+        ),
+        lookups["whois_ip"].select(
+            F.col("ip").alias("_ipk"),
+            *[F.col(c).alias(f"_wi_{c}") for c in _WHOIS_IP_SRC],
+        ),
+        lookups["shodan_idb"].select(
+            F.col("ip").alias("_ipk"),
+            F.array_join("cpes", "|").alias("_idb_cpes"),
+            F.array_join("hostnames", "|").alias("_idb_hostnames"),
+            F.array_join(F.transform("ports", lambda x: x.cast("string")), "|").alias(
+                "_idb_ports"
+            ),
+            F.array_join("tags", "|").alias("_idb_tags"),
+            F.array_join("vulns", "|").alias("_idb_vulns"),
+        ),
+    ]
     # key union + left joins rather than chained full_outer: full outer
     # can't broadcast (it would plan lookup-side SortMergeJoins); left
     # joins of dimension-sized frames stay BroadcastHashJoin all the way
@@ -494,17 +399,14 @@ def _combined_ip_lookup(
     combined = keys.distinct()
     for lk in ip_lookups:
         combined = combined.join(F.broadcast(lk), "_ipk", "left")
-    # session-temp parquet round-trip, NOT createDataFrame(rows): a
-    # rows-list frame scans through a pickled Python RDD and would re-pay
-    # a Python worker on every later broadcast build; the parquet
-    # read-back is a trivial JVM scan. Dimension-only data, removed at
-    # interpreter exit.
-    import atexit
-    import shutil
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="lb_combined_lookup_")
-    atexit.register(shutil.rmtree, d, ignore_errors=True)
-    combined.coalesce(1).write.mode("overwrite").parquet(d)
-    lookups[cache_key] = combined.sparkSession.read.parquet(d)
-    return lookups[cache_key]
+    # a "none" TLD (no registrable domain) never matches a WHOIS row
+    wd = lookups["whois_domain"].selectExpr(
+        "domain AS _wd_domain",
+        "created AS _wd_created",
+        "updated AS _wd_updated",
+        "country AS _wd_country",
+        "org AS _wd_org",
+    )
+    tld = F.col("_tld_lk")
+    wd_cond = F.when(tld != "none", tld) == wd["_wd_domain"]
+    return combined.join(F.broadcast(wd), wd_cond, "left").drop("_wd_domain")

@@ -156,6 +156,21 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def read_transcripts(spark, args):
+    """The batch pipeline's input. Every commit-group job reads this one
+    frame, so a log directory is staged first (an eager local
+    checkpoint): its reader's expressions (the conv_id regexp_replace,
+    the per-split window, the offset join) then run once, and the jobs
+    share only a plain leaf, not expression instances."""
+    if args.input_format != "logs":
+        return spark.read.parquet(args.input)
+    from logboost_spark.sources.readers import read_log_directory
+
+    return read_log_directory(spark, args.input, getall=args.getall).localCheckpoint(
+        eager=True
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     from logboost_spark.session import get_spark
@@ -242,12 +257,7 @@ def main(argv: list[str] | None = None) -> int:
             "rows": n_rows, "distinct_ips": n_ips,
         }))
         return 0
-    # shallow copy of the base tables only: build_lookup_dfs returns the
-    # per-session shared dict (it doubles as the derived-table cache,
-    # tuple-keyed); the --intelfile path below replaces "ti", which must
-    # neither leak into other callers nor reuse a combined-lookup cache
-    # built from the pristine TI table
-    lookups = {k: v for k, v in build_lookup_dfs(spark).items() if isinstance(k, str) and not k.startswith("_")}
+    lookups = build_lookup_dfs(spark)
     intel_flags = [args.intelfile, args.intelname, args.inteltype]
     if any(intel_flags):
         if not all(intel_flags):
@@ -262,9 +272,7 @@ def main(argv: list[str] | None = None) -> int:
             args.intelname,
             args.inteltype,
         )
-        lookups["ti"] = lookups["ti"].unionByName(custom).dropDuplicates(
-            ["ip", "feed_name", "category"]
-        )
+        lookups = lookups.with_ti(custom)
     if args.summarizeti:
         # reference -summarizeti (main.go:547-555 → SummarizeThreatDB):
         # distinct indicator count over the TI table (+ any --intelfile)
@@ -289,12 +297,7 @@ def main(argv: list[str] | None = None) -> int:
         ]
         print(json.dumps({"feeds": feeds}))
         return 0
-    if args.input_format == "logs":
-        from logboost_spark.sources.readers import read_log_directory
-
-        transcripts = read_log_directory(spark, args.input, getall=args.getall)
-    else:
-        transcripts = spark.read.parquet(args.input)
+    transcripts = read_transcripts(spark, args)
     # the date window applies only when both ends are given
     window = (args.startdate, args.enddate) if args.startdate and args.enddate else (None, None)
     if args.stream:

@@ -53,3 +53,30 @@ def test_route_matches_oracle(spark, lookups):
         for r in base.itertuples()
     ]
     assert list(eng["sink"]) == want
+
+
+def test_prepared_lookups_frozen_and_with_ti_isolated(spark, lookups):
+    """build_lookup_dfs hands every caller one frozen set: assigning to it
+    raises, and a custom TI feed (the CLI's --intelfile) lives only in the
+    new set with_ti returns, never in the session's own."""
+    import pytest
+
+    from logboost_spark.fixtures.lookups import build_lookup_dfs
+
+    assert build_lookup_dfs(spark) is lookups
+    with pytest.raises(TypeError):
+        lookups["ti"] = lookups["ti"]
+    with pytest.raises(AttributeError):
+        lookups.combined_ip = lookups["ti"]
+    custom = spark.createDataFrame(
+        [("8.8.8.8", "customfeed", "suspicious")], "ip string, feed_name string, category string"
+    )
+    sdf = spark.createDataFrame(
+        [("c", 0, "conn from 8.8.8.8 ok")], "conv_id string, turn_idx int, text string"
+    )
+
+    def feeds(lk):
+        return enrich(sdf, lk, use_whois=False, use_idb=False).first()["lb_ThreatFeeds"]
+
+    assert "customfeed" in feeds(lookups.with_ti(custom))
+    assert "customfeed" not in feeds(build_lookup_dfs(spark))

@@ -336,23 +336,19 @@ def _identity_set(jvm, objs):
     return m
 
 
-def test_group_jobs_share_no_expression_instances(spark, lookups, tmp_path, monkeypatch):
-    """The r07 cross-row-bleed race needs two in-flight group jobs to share
-    driver-side expression instances. Two group plans built by
-    write_routed's factory from one run's compiled pipeline, date filter
-    included, must not: every expression node of one analyzed plan is a
-    different JVM object from every node of the other (JVM identity,
+def _assert_group_jobs_share_only_input(spark, transcripts, lookups, tmp_path, monkeypatch):
+    """Two group plans built by write_routed's factory from one run's
+    compiled pipeline, date filter included, share no expression
+    instance: every expression node of one analyzed plan is a different
+    JVM object from every node of the other (JVM identity,
     System.identityHashCode plus reference equality). Excluded: the
-    subplans both jobs read by construction (the caller's plain scan and
-    the prepared lookup sides: plan nodes that are the same object in
-    both must lie inside them) and attribute references, which only name
-    those relations' columns."""
+    subplans both jobs read by construction (``transcripts``, which must
+    be an expression-free leaf, and the prepared lookup sides: plan nodes
+    that are the same object in both must lie inside them) and attribute
+    references, which only name those relations' columns."""
     from logboost_spark.plans import pipeline
     from logboost_spark.plans.checkpoint import group_rows
 
-    src = str(tmp_path / "src")
-    spark.createDataFrame(TR.gen_pandas(200)).write.parquet(src)
-    sdf = spark.read.parquet(src)
     got = {}  # the (source, finish) pair run_pipeline hands to write_routed
 
     def capture(source, finish, *args, **kwargs):
@@ -361,7 +357,7 @@ def test_group_jobs_share_no_expression_instances(spark, lookups, tmp_path, monk
 
     monkeypatch.setattr(pipeline, "write_routed", capture)
     run_pipeline(
-        spark, sdf, lookups, str(tmp_path / "unused"), n_groups=2,
+        spark, transcripts, lookups, str(tmp_path / "unused"), n_groups=2,
         start="2000-01-01 00:00:00", end="2100-01-01 00:00:00",
     )
     jvm = spark.sparkContext._jvm
@@ -370,26 +366,62 @@ def test_group_jobs_share_no_expression_instances(spark, lookups, tmp_path, monk
         df = group_rows(got["source"], got["finish"], g, 2, 2)
         return df._jdf.queryExecution().analyzed()
 
+    skip = {"AttributeReference"}
+    scan = transcripts._jdf.queryExecution().analyzed()
+    assert scan.children().size() == 0 and not _expressions([scan], skip), (
+        "the pipeline input must be a plain leaf"
+    )
     nodes_a, nodes_b = _plan_nodes(analyzed(0)), _plan_nodes(analyzed(1))
     in_a, in_b = _identity_set(jvm, nodes_a), _identity_set(jvm, nodes_b)
     shared = [n for n in nodes_a if in_b.containsKey(n)]
-    # what both jobs may read: the caller's scan and every join's lookup side
-    roots = [sdf._jdf.queryExecution().analyzed()] + [
+    # what both jobs may read: the input and every join's lookup side
+    roots = [scan] + [
         n.right() for n in nodes_a if n.getClass().getSimpleName() == "Join"
     ]
     relations = _identity_set(jvm, [n for r in roots for n in _plan_nodes(r)])
-    assert in_b.containsKey(roots[0]), "expected the scan to be shared"
+    assert in_b.containsKey(scan), "expected the input to be shared"
     assert all(relations.containsKey(n) for n in shared), (
-        "group plans share nodes above the scan and lookup relations"
+        "group plans share nodes above the input and lookup relations"
     )
 
-    skip = {"AttributeReference"}
     exprs_a = _expressions([n for n in nodes_a if not in_b.containsKey(n)], skip)
     exprs_b = _expressions([n for n in nodes_b if not in_a.containsKey(n)], skip)
     assert len(exprs_a) > 500 and len(exprs_b) > 500
     in_exprs_a = _identity_set(jvm, exprs_a)
     both = [e.toString() for e in exprs_b if in_exprs_a.containsKey(e)]
     assert not both, f"{len(both)} expression instances shared, e.g. {both[:3]}"
+
+
+def test_group_jobs_share_no_expression_instances(spark, lookups, tmp_path, monkeypatch):
+    """The r07 cross-row-bleed race needs two in-flight group jobs to share
+    driver-side expression instances; over a parquet scan they share none."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(TR.gen_pandas(200)).write.parquet(src)
+    _assert_group_jobs_share_only_input(
+        spark, spark.read.parquet(src), lookups, tmp_path, monkeypatch
+    )
+
+
+def test_log_input_group_jobs_share_no_expression_instances(
+    spark, lookups, tmp_path, monkeypatch
+):
+    """The CLI's log-directory input (read_log_directory: a regexp_replace,
+    a window and a join) is staged before the pipeline, so group jobs
+    over it share no expression instances either."""
+    import main as M
+
+    logs = tmp_path / "logs"
+    logs.mkdir()
+    (logs / "a.log").write_text(
+        "".join(f"conn {i} from 8.8.8.{i % 200} ok\n" for i in range(60))
+    )
+    (logs / "b.txt").write_text("no address here\nfrom 10.0.0.5 denied\n")
+    args = M.build_parser().parse_args(
+        ["--input", str(logs), "--output", str(tmp_path / "out"), "--input-format", "logs"]
+    )
+    _assert_group_jobs_share_only_input(
+        spark, M.read_transcripts(spark, args), lookups, tmp_path, monkeypatch
+    )
 
 
 def test_builders_run_once_per_run(spark, lookups, tmp_path, monkeypatch):

@@ -18,11 +18,11 @@ def test_enrich_all_joins_broadcast(spark, lookups):
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan  # fact side must never shuffle
     # ONE merged geo range join + ONE combined ip-keyed join (ti/dns/
-    # whois-ip/idb pre-joined lookup-side ONCE per session, then
-    # materialized as a 1-partition local frame — the pre-join no longer
-    # appears in per-query plans) + whois-domain: exactly the 3 fact-side
-    # broadcast probes
-    assert plan.count("BroadcastHashJoin") == 3
+    # whois-ip/idb and whois-domain pre-joined lookup-side ONCE per
+    # session, then materialized as a 1-partition local frame — the
+    # pre-join no longer appears in per-query plans): exactly the 2
+    # fact-side broadcast probes
+    assert plan.count("BroadcastHashJoin") == 2
 
 
 def test_parquet_filter_pushdown(spark):
